@@ -62,12 +62,12 @@ def pq_train(
     ).persist()
 
     first = base.select(F.size("__v").alias("d")).first()
-    if first is None:
-        base.unpersist()
-        raise ValueError("pq_train: empty corpus")
+    if first is None or first["d"] % m:
+        base.unpersist()  # the finally below does not cover the probe
+        if first is None:
+            raise ValueError("pq_train: empty corpus")
+        raise ValueError(f"dim {first['d']} not divisible by m={m}")
     d = int(first["d"])
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
 
     def _init(batches):

@@ -3,19 +3,17 @@
 A query over slowly-changing parquet snapshots shouldn't recompute on
 every read — but serving a stale cache after the snapshot moved is a
 correctness bug, not a perf feature.  `MaterializedView` keys the
-cached result on (a) a fingerprint of the inputs' on-disk state —
-every data file's (path, size, mtime_ns) under the declared input
-paths — and (b) a fingerprint of the query itself (its analyzed
-logical plan string), so EITHER new data OR a changed view definition
-invalidates.  Reads hit parquet when fresh and rebuild atomically
-(plans/incremental.py's swap: readers never observe a half-written
-view) when stale.
-
-100 TB posture: the freshness check is a driver-side directory listing
-(the same metadata a parquet scan lists anyway), never a data read; on
-an object store the (path, size, mtime) listing is one LIST call per
-input prefix.  The rebuild cost is the query itself — the cache makes
-repeated dashboard/pipeline reads O(listing), not O(query).
+cached result on (a) the inputs' on-disk state — for a `SnapshotTable`
+root its head log record's (version, size, mtime_ns), which every
+commit moves; for any other path every file's (path, size, mtime_ns)
+— and (b) the query's analyzed logical plan, so EITHER new data OR a
+changed view definition invalidates.  The plan fingerprint costs a
+`build()`, so it is taken once per view object (first freshness
+check) and once per refresh, from the DataFrame the refresh writes: a
+hit is one `_log/` listing and one stat, never a build.  Stale views
+rebuild atomically (plans/incremental.py's swap: readers never observe
+a half-written view).  The check is driver-side metadata, never a
+data read; the rebuild cost is the query itself.
 """
 
 from __future__ import annotations
@@ -27,7 +25,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dbt_lab_spark.plans.snapshots import _read_pq
+from dbt_lab_spark.plans.snapshots import _read_pq, head_record_stamp
 
 from dbt_lab_spark.plans.incremental import _atomic_swap_write
 
@@ -35,10 +33,13 @@ _MANIFEST = "_matview_manifest.json"
 
 
 def _input_fingerprint(paths: Sequence[str]) -> str:
-    """Fingerprint the inputs' on-disk state: every file's
-    (relpath, size, mtime_ns) under each input path, order-canonical."""
+    """Fingerprint the inputs' on-disk state, order-canonical: a snapshot
+    table's head record stamp, else every file's (relpath, size, mtime_ns)."""
     h = hashlib.sha256()
     for root in sorted(paths):
+        if (stamp := head_record_stamp(root)) is not None:
+            h.update(f"{root}@{stamp}\n".encode())
+            continue
         if os.path.isfile(root):
             st = os.stat(root)
             h.update(f"{root}|{st.st_size}|{st.st_mtime_ns}\n".encode())
@@ -88,34 +89,36 @@ class MaterializedView:
         self.build = build
         self.inputs = list(inputs)
         self.path = os.path.join(store, name)
+        self._plan_fp: str | None = None
         os.makedirs(store, exist_ok=True)
 
     # -- freshness -------------------------------------------------------
     def _manifest_path(self) -> str:
         return self.path + "." + _MANIFEST
 
-    def _current_fingerprints(self, spark: SparkSession) -> dict[str, str]:
-        return {
-            "inputs": _input_fingerprint(self.inputs),
-            "plan": _plan_fingerprint(self.build(spark)),
-        }
-
     def is_fresh(self, spark: SparkSession) -> bool:
         if not os.path.exists(self.path) or not os.path.exists(self._manifest_path()):
             return False
         with open(self._manifest_path()) as fh:
             stored = json.load(fh)
-        return stored == self._current_fingerprints(spark)
+        if stored.get("inputs") != _input_fingerprint(self.inputs):
+            return False
+        if self._plan_fp is None:
+            self._plan_fp = _plan_fingerprint(self.build(spark))
+        return stored.get("plan") == self._plan_fp
 
     # -- read / refresh --------------------------------------------------
     def refresh(self, spark: SparkSession) -> None:
-        """Rebuild unconditionally (atomic swap — concurrent readers
-        keep the old view until the rename lands)."""
-        fps = self._current_fingerprints(spark)
-        _atomic_swap_write(self.build(spark), self.path)
+        """Rebuild unconditionally (atomic swap — readers keep the old
+        view until the rename lands; inputs are fingerprinted BEFORE the
+        build, so a commit landing mid-build leaves the view stale)."""
+        inputs = _input_fingerprint(self.inputs)
+        df = self.build(spark)
+        self._plan_fp = _plan_fingerprint(df)
+        _atomic_swap_write(df, self.path)
         tmp = self._manifest_path() + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump(fps, fh)
+            json.dump({"inputs": inputs, "plan": self._plan_fp}, fh)
         os.replace(tmp, self._manifest_path())
 
     def read(self, spark: SparkSession) -> DataFrame:

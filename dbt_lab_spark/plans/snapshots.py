@@ -264,6 +264,21 @@ _MANIFEST_CACHE: dict = {}  # (path, stat) -> parsed manifest dict
 _MISSING = object()
 
 
+def head_record_stamp(root: str) -> tuple[int, int, int] | None:
+    """(version, size, mtime_ns) of the head log record of the local
+    SnapshotTable at `root` (None: no committed log) — one `_log/`
+    listing and one stat that every commit, and every re-creation of
+    the table at the same root, moves."""
+    log = os.path.join(root, "_log")
+    try:
+        names = [n[:-5] for n in os.listdir(log) if n.endswith(".json")]
+        v = max(int(n) for n in names if n.isdigit())
+        st = os.stat(os.path.join(root, SnapshotTable._seg_key(v)))
+    except (OSError, ValueError):
+        return None
+    return (v, st.st_size, st.st_mtime_ns)
+
+
 def _file_stats(snapshot_dir: str, stat_cols: list[str]) -> dict[str, dict]:
     """Per-data-file min/max for `stat_cols`, read from parquet FOOTERS
     only (no data pages) — the data-skipping manifest entry."""
@@ -343,6 +358,20 @@ def _all_nullable(dt):
     return dt
 
 
+def _first_footer_file(paths) -> str | None:
+    """The first parquet data file under `paths` (directories or
+    files), in listing order — the one footer the driver-side schema
+    helpers read; None when there is none."""
+    for p in paths:
+        if os.path.isdir(p):
+            for fn in sorted(os.listdir(p)):
+                if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
+                    return os.path.join(p, fn)
+        elif p.endswith(".parquet"):
+            return p
+    return None
+
+
 def _footer_spark_schema(paths):
     """Spark StructType of the FIRST parquet footer under `paths`
     (directories or files), derived DRIVER-side via pyarrow — skipping
@@ -355,17 +384,7 @@ def _footer_spark_schema(paths):
     so callers can fall back to inference — never guess."""
     import pyarrow.parquet as pq
 
-    f = None
-    for p in paths:
-        if os.path.isdir(p):
-            for fn in sorted(os.listdir(p)):
-                if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
-                    f = os.path.join(p, fn)
-                    break
-        elif p.endswith(".parquet"):
-            f = p
-        if f:
-            break
+    f = _first_footer_file(paths)
     if f is None:
         return None
     try:
@@ -373,7 +392,7 @@ def _footer_spark_schema(paths):
 
         pf = pq.ParquetFile(f)
         phys = pf.metadata.schema
-        for i in range(phys.num_columns):
+        for i in range(len(phys)):
             if phys.column(i).physical_type == "INT96":
                 return None
 
@@ -385,7 +404,7 @@ def _footer_spark_schema(paths):
             # session-timezone value shift.  Bail to inference.
             if isinstance(t, pa.TimestampType):
                 return t.tz is None
-            if pa.types.is_list(t) or pa.types.is_large_list(t):
+            if isinstance(t, (pa.ListType, pa.LargeListType, pa.FixedSizeListType)):
                 return has_ntz_ts(t.value_type)
             if pa.types.is_struct(t):
                 return any(has_ntz_ts(t.field(i).type) for i in range(t.num_fields))
@@ -434,18 +453,8 @@ def _schema_matches_footer(paths, schema) -> bool:
     errors)."""
     import pyarrow.parquet as pq
 
-    f = None
     try:
-        for p in paths:
-            if os.path.isdir(p):
-                for fn in sorted(os.listdir(p)):
-                    if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
-                        f = os.path.join(p, fn)
-                        break
-            elif p.endswith(".parquet"):
-                f = p
-            if f:
-                break
+        f = _first_footer_file(paths)
         if f is None:
             return True
         names = set(pq.ParquetFile(f).schema_arrow.names)
@@ -747,14 +756,7 @@ class SnapshotTable:
         records in `recs` (each carries {old: new} for that evolve)."""
         cur: dict[str, str] = {}
         for r in recs:
-            ren = r.get("renames") or {}
-            if not ren:
-                continue
-            currents = set(cur.values())
-            cur = {orig: ren.get(c, c) for orig, c in cur.items()}
-            for old, new in ren.items():
-                if old not in currents:
-                    cur[old] = new
+            cur = self._compose_step(cur, r.get("renames") or {})
         return cur
 
     def _live_cols(self, cols: list[str]) -> list[str]:
@@ -854,8 +856,7 @@ class SnapshotTable:
     @staticmethod
     def _compose_step(cur: dict, ren: dict) -> dict:
         """One evolve's {old: new} composed onto the running
-        original-name -> current-name map (same algebra as
-        _compose_renames, one step at a time)."""
+        original-name -> current-name map."""
         if not ren:
             return cur
         currents = set(cur.values())
@@ -3286,20 +3287,18 @@ class SnapshotTable:
 
         CoW mechanics, the part that matters at 100 TB: only snapshot
         directories that actually CONTAIN matching keys are rewritten.
-        Touched directories are found with one metadata-projected
-        semi-join (`_metadata.file_path` against the source keys — no
-        data columns cross the shuffle beyond the keys), then the
-        rewrite reads ONLY those directories; every untouched directory
-        is carried into the new version's manifest by reference.  An
-        update touching 1 of 10k directories rewrites 1 directory.
-        Commit granularity is the snapshot directory (this log's
-        manifest unit), one level coarser than Delta's per-file
-        rewrite but the same mechanics.
-
-        Source keys must be unique (the SQL MERGE multiple-match error,
-        checked with one aggregate); source schema must match the
-        table's.  History is preserved — time travel to pre-merge
-        versions still reads the old directories until `vacuum`.
+        One probe action (per-key source counts left-outer-joined to the
+        table's key-only `_metadata.file_path` projection, grouped by
+        file) finds them and checks key uniqueness: a count above 1 is
+        the SQL MERGE multiple-match error, every non-null file is
+        touched.  The write is `touched rows ▷ source ∪ source` — with
+        unique keys, updates ∪ inserts IS the source, null keys
+        included — and every untouched directory is carried into the
+        new version by reference: an update touching 1 of 10k
+        directories rewrites 1.  `mode="dv"` checks key uniqueness
+        with its own aggregate.  Source columns must match the table's
+        (checked driver-side, before any job).  History is preserved
+        until `vacuum`.
 
         UPSERT-BY-KEY contract (deliberate, both modes): the table is
         treated as keyed on `on` — ALL target rows matching a source
@@ -3319,11 +3318,7 @@ class SnapshotTable:
         if head_state is None:
             raise ValueError(f"snapshot table {self.root} has no commits")
         head = head_state[0]
-        dup = (
-            source.groupBy(*on).count().filter(F.col("count") > 1).limit(1).count()
-        )
-        if dup:
-            raise ValueError("merge: source has duplicate keys for ON columns")
+        dup_err = "merge: source has duplicate keys for ON columns"
         table_cols = head.get("columns")
         if table_cols is not None and set(source.columns) != set(table_cols):
             raise ValueError(
@@ -3355,8 +3350,8 @@ class SnapshotTable:
         dv_budget = self.DV_WRITE_MAX_ROWS if max_dv_rows is None else max_dv_rows
         dv_fallback = False
         if mode == "dv":
-            import shutil
-
+            if source.groupBy(*on).count().filter(F.col("count") > 1).limit(1).count():
+                raise ValueError(dup_err)
             keys = source.select(*on)
             matched = (
                 self._read_paths(
@@ -3416,31 +3411,32 @@ class SnapshotTable:
                     "n_dirs_total": len(head["files"]),
                     "n_updated": int(n_updated),
                 }
-        target = self._read_paths(spark, head, head["files"])
-        keys = source.select(*on)
-        touched_files = [
-            r["__f"]
-            for r in self._read_paths(spark, head, head["files"], with_file=True)
-            .select("__f", *on)
-            .join(keys, on, "left_semi")
-            .select("__f")
-            .distinct()
-            .collect()
-        ]
-        touched = self._touched_dirs(head, touched_files)
-        untouched = [d for d in head["files"] if d not in touched]
-        inserts = source.join(target.select(*on).distinct(), on, "left_anti")
-        if touched:
-            kept_rows = self._read_paths(spark, head, touched).join(
-                source, on, "left_anti"
+        probe = (
+            source.groupBy(*on)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .join(
+                self._read_paths(spark, head, head["files"], with_file=True)
+                .select("__f", *on),
+                on,
+                "left_outer",
             )
-            # matched keys live only in touched dirs (that's what makes
-            # them touched), so "source semi target-keys" is the update
-            # set — and the key scan is column-pruned.
-            updates = source.join(target.select(*on).distinct(), on, "left_semi")
-            new_rows = kept_rows.unionByName(updates).unionByName(inserts)
-        else:
-            new_rows = inserts
+            .groupBy("__f")
+            .agg(F.max("__n").alias("__n"))
+            .collect()
+        )
+        if any(r["__n"] > 1 for r in probe):
+            raise ValueError(dup_err)
+        touched = self._touched_dirs(
+            head, [r["__f"] for r in probe if r["__f"] is not None]
+        )
+        untouched = [d for d in head["files"] if d not in touched]
+        new_rows = (
+            self._read_paths(spark, head, touched)
+            .join(source, on, "left_anti")
+            .unionByName(source)
+            if touched
+            else source
+        )
         d = self._new_dir("merge")
         new_rows.write.mode("errorifexists").parquet(d)
         self._write_manifest(spark, d)
@@ -3486,7 +3482,7 @@ class SnapshotTable:
         with no matches are carried into the new version by reference.
         Detection is one metadata-projected scan (`_metadata.file_path`
         + the condition — Catalyst prunes the read to the condition's
-        columns), the same mechanics as merge's touched-dir pass; a
+        columns) grouped by file, which also counts the deleted rows; a
         delete hitting 1 of 10k directories rewrites 1 directory, and
         a predicate matching nothing commits nothing (no empty
         version).  History is preserved for time travel until
@@ -3521,8 +3517,6 @@ class SnapshotTable:
         dv_budget = self.DV_WRITE_MAX_ROWS if max_dv_rows is None else max_dv_rows
         dv_fallback = False
         if mode == "dv":
-            import shutil
-
             matched = (
                 self._read_paths(
                     spark, head, head["files"], with_file=True, with_pos=True
@@ -3575,15 +3569,14 @@ class SnapshotTable:
                     "n_dirs_total": len(head["files"]),
                     "n_deleted": int(n_deleted),
                 }
-        touched_files = [
-            r["__f"]
-            for r in self._read_paths(spark, head, head["files"], with_file=True)
+        hits = (
+            self._read_paths(spark, head, head["files"], with_file=True)
             .filter(cond)
-            .select("__f")
-            .distinct()
+            .groupBy("__f")
+            .count()
             .collect()
-        ]
-        touched = self._touched_dirs(head, touched_files)
+        )
+        touched = self._touched_dirs(head, [r["__f"] for r in hits])
         if not touched:
             return {
                 "version": None,
@@ -3592,12 +3585,12 @@ class SnapshotTable:
                 "n_deleted": 0,
             }
         untouched = [d for d in head["files"] if d not in touched]
-        src = self._read_paths(spark, head, touched)
-        n_before = src.count()
-        kept_rows = src.filter(~F.coalesce(cond, F.lit(False)))
+        kept_rows = self._read_paths(spark, head, touched).filter(
+            ~F.coalesce(cond, F.lit(False))
+        )
         d = self._new_dir("delete")
         kept_rows.write.mode("errorifexists").parquet(d)
-        n_deleted = n_before - _dir_num_rows(d)
+        n_deleted = sum(r["count"] for r in hits)
         self._write_manifest(spark, d)
         rec = {
             "operation": (

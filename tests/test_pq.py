@@ -143,3 +143,13 @@ def test_adc_query_collect_is_guarded(spark):
         ivfpq_knn(corpus, queries, cents, cb, k=3, nprobe=4, max_queries=4)
     # at the bound: works unchanged
     assert pq_adc_knn(codes, queries, cb, k=3, max_queries=5).count() > 0
+
+
+def test_pq_bad_dims_release_persisted_corpus(spark):
+    """The d % m error path unpersists the frame pq_train persisted."""
+    df = _corpus(spark, n=20, d=10)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(ValueError, match="divisible"):
+        pq_train(df, m=4)
+    assert jsc.getPersistentRDDs().size() == before

@@ -527,3 +527,112 @@ def test_check_constraints(spark, tmp_path):
     t.drop_constraint("amt_nonneg")
     t.append(spark.createDataFrame([(4, -1.0)], "k long, amt double"))
     assert t.read(spark).count() == 4
+
+
+def _upsert_oracle(target, source):
+    """The keyed upsert in DuckDB: target rows whose key the source does
+    not carry (a NULL key never matches), plus every source row."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    for name, rows in (("t", target), ("s", source)):
+        con.register(name, pd.DataFrame(rows, columns=["k", "v"]).astype({"k": "Int64"}))
+    got = con.execute(
+        "SELECT k, v FROM t ANTI JOIN s USING (k) UNION ALL SELECT k, v FROM s"
+    ).fetchall()
+    return sorted(got, key=repr)
+
+
+def test_merge_cow_matches_upsert_oracle(spark, tmp_path):
+    """CoW merge equals DuckDB's upsert for a pure insert, an
+    update-only merge, a mixed merge and a source with NULL keys, on a
+    table spread over several directories (one carrying a NULL key)."""
+    cases = {
+        "insert": [(100, "n1"), (101, "n2")],
+        "update": [(1, "U1"), (11, "U11")],
+        "mixed": [(2, "U2"), (20, "U20"), (200, "n")],
+        "null_keys": [(None, "nk"), (3, "U3"), (300, "n")],
+    }
+    for name, source in cases.items():
+        t = SnapshotTable(str(tmp_path / name))
+        target = [(1, "a"), (2, "b"), (3, "c")]
+        t.commit(_df(spark, target))
+        for rows in ([(10, "d"), (11, "e")], [(20, "f"), (None, "g")]):
+            t.append(_df(spark, rows))
+            target = target + rows
+        t.merge(spark, _df(spark, source), on=["k"], mode="cow")
+        got = sorted(((r.k, r.v) for r in t.read(spark).collect()), key=repr)
+        assert got == _upsert_oracle(target, source), name
+
+
+def test_merge_duplicate_source_keys_raise_in_both_modes(spark, tmp_path):
+    """Duplicates matching a target key, duplicates inserted fresh, and
+    duplicate NULL keys are all the multiple-match error in both modes,
+    and nothing is committed."""
+    import pytest
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit(_df(spark, [(1, "a"), (2, "b")]))
+    n = len(t.versions())
+    for mode in ("cow", "dv"):
+        for k in (1, 7, None):
+            rows = [(k, "x"), (k, "y")]
+            with pytest.raises(ValueError, match="duplicate keys"):
+                t.merge(spark, _df(spark, rows), on=["k"], mode=mode)
+    assert len(t.versions()) == n
+
+
+def test_merge_column_error_precedes_duplicate_check(spark, tmp_path):
+    """A source with the wrong columns AND duplicate keys raises the
+    driver-side column error, before any Spark job."""
+    import pytest
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit(_df(spark, [(1, "a")]))
+    bad = spark.createDataFrame([(1, "x"), (1, "y")], "k long, w string")
+    for mode in ("cow", "dv"):
+        with pytest.raises(ValueError, match="source columns"):
+            t.merge(spark, bad, on=["k"], mode=mode)
+
+
+def test_merge_cow_job_count(spark, tmp_path):
+    """A CoW merge runs one probe action plus the write: on this small
+    table it starts 8 Spark jobs, where a separate duplicate-key
+    aggregate, a touched-file collect and a write that scanned every
+    target key twice started 14."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit(_df(spark, [(1, "a"), (2, "b")]))
+    t.append(_df(spark, [(10, "c"), (11, "d")]))
+    src = _df(spark, [(10, "C"), (99, "n")])
+    sc = spark.sparkContext
+    group = "test_merge_cow_job_count"
+    sc.setJobGroup(group, "cow merge")
+    try:
+        t.merge(spark, src, on=["k"], mode="cow")
+    finally:
+        sc._jsc.clearJobGroup()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 8, n_jobs
+
+
+def test_footer_schema_bails_on_ntz_timestamp_in_fixed_size_list(tmp_path):
+    """A tz-naive timestamp nested in a fixed_size_list is a footer
+    the driver cannot map 1:1 to JVM inference: return None.  A plain
+    footer still maps."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbt_lab_spark.plans.snapshots import _footer_spark_schema
+
+    ts = datetime.datetime(2024, 1, 1)
+    typ = pa.list_(pa.timestamp("us"), 2)
+    path = str(tmp_path / "f.parquet")
+    pq.write_table(pa.table({"ts": pa.array([[ts, ts]], type=typ)}), path)
+    assert pa.types.is_fixed_size_list(pq.read_schema(path).field("ts").type)
+    assert _footer_spark_schema([path]) is None
+    plain = str(tmp_path / "g.parquet")
+    pq.write_table(pa.table({"x": pa.array([1], type=pa.int64())}), plain)
+    assert _footer_spark_schema([plain]) is not None

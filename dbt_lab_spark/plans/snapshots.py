@@ -54,6 +54,7 @@ partition pruning and predicate pushdown apply unchanged.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import threading
@@ -703,7 +704,23 @@ class SnapshotTable:
     every commit (footer reads only); `read(..., between=(col, lo,
     hi))` then PRUNES non-overlapping files from the scan before Spark
     sees them — manifest-based data skipping, the file-level
-    complement to parquet's row-group zone maps."""
+    complement to parquet's row-group zone maps.
+
+    Commit path: every mutation stages, then publishes.  `_stage`
+    reserves a directory (`_new_dir`), writes a DataFrame into it and
+    its manifest sidecar (`_write_manifest`; a DV sidecar has none).
+    `_publish` builds the record against the head the mutation read
+    and publishes it (`_append_log`): content-dependent mutations CAS
+    on that head, while the order-independent writers (commit, append,
+    append_stream_batch) rebuild it against the live head and
+    re-validate constraints added since.  Staged dirs live in a
+    `_staging()` scope; leaving it removes every staged dir no
+    published record references, so a mutation that raises, or
+    publishes nothing, leaves no directory behind, and a published dir
+    is never removed.  Carry-over (`_record`): a record inherits every
+    non-empty parent metadata key except the per-commit `batch_id` and
+    `renames`; the `dir_*` maps are derived from its file list and the
+    staged dirs' schemas; a mutation sets only what it changes."""
 
     # read-side DV budget: accumulated DV rows above this flip the
     # merge-on-read apply from a broadcast anti-join to a shuffle
@@ -804,13 +821,15 @@ class SnapshotTable:
     # at most N record files past the nearest checkpoint
     CHECKPOINT_EVERY = 10
 
-    # seconds to wait on the vacuum lock before declaring its owner
-    # crashed; recovery is deleting the named lock file
-    COMMIT_WAIT_S = 30.0
-
     # keys the fold machinery owns; everything else in a record is
     # metadata diffed against the parent
     _SEG_OWNED = ("version", "ts", "operation", "files")
+
+    # metadata that belongs to one commit and is never carried over
+    _PER_COMMIT = ("batch_id", "renames")
+
+    # per-directory schema maps, derived for every record (_dir_meta)
+    _DIR_KEYS = ("dir_columns", "dir_schema_json", "dir_logical_columns")
 
     @staticmethod
     def _seg_key(v: int) -> str:
@@ -1058,6 +1077,14 @@ class SnapshotTable:
         hv = self._head_version()
         return self._state_at(hv) if hv >= 0 else None
 
+    def _head(self, version: int | None = None) -> dict:
+        """The head record (or the record at `version`); raises on a
+        table with no commits."""
+        hv = self._head_version()
+        if hv < 0:
+            raise ValueError(f"snapshot table {self.root} has no commits")
+        return self._rec_at(hv if version is None else version)
+
     def _rec_at(self, version: int) -> dict:
         return self._state_at(version)[0]
 
@@ -1133,29 +1160,35 @@ class SnapshotTable:
                 )
             time.sleep(0.02)
 
+    def _acquire_vacuum_lock(self, payload: bytes) -> None:
+        """Take the vacuum lock (vacuum and rollback hold it), waiting
+        out a live holder and reporting a stale one by name."""
+        while not self.protocol.put_if_absent(self._VACUUM_LOCK, payload):
+            age = self._vacuum_lock_age()
+            if age is not None and age > self.VACUUM_LOCK_STALE_S:
+                raise StaleCommitMarkerError(
+                    f"snapshot table {self.root}: vacuum lock "
+                    f"{self._VACUUM_LOCK} is {age:.0f}s old — a vacuum "
+                    "crashed; delete the lock file to recover"
+                )
+            time.sleep(0.02)
+
     def _append_log(
         self,
         record: dict,
         expected_parent: int | None = None,
         _during_vacuum: bool = False,
     ) -> int:
-        """Conflict-checked commit (VERDICT r7 #1 optimistic
-        concurrency, re-based r8 onto per-version record files):
-        version N is published by whoever atomically CREATES
-        `_log/{N}.json` via the protocol's put_if_absent — the claim
-        and the record are one object, so interleaved committers can
-        never drop each other's record, and a crashed committer leaves
-        nothing to go stale (ADVICE r8: the old claim-then-publish
-        split let a stalled writer reclaim a vacuumed marker and
-        publish a duplicate version; with publish == create that
-        cannot be expressed).
+        """Publish `record`, as given, as the next version: version N
+        is whoever atomically CREATES `_log/{N}.json` via the
+        protocol's put_if_absent — the claim and the record are one
+        object, so interleaved committers never drop each other's
+        record and a crashed committer leaves nothing to go stale.
 
-        `expected_parent` is the head version the operation's reads
-        were based on: if the head moved by commit time the write is
-        REJECTED with ConcurrentWriteError (first-committer-wins, the
-        lakehouse-log conflict rule).  Append-only callers pass None
-        (or catch and rebase): their record is rebuilt from the live
-        head, so any serialization order is correct.
+        `expected_parent` is the head version the record was built
+        against: if the head moved, the write is REJECTED with
+        ConcurrentWriteError (first-committer-wins).  What the record
+        carries over from its parent is `_record`'s decision.
 
         Returns the committed version number."""
         while True:
@@ -1169,36 +1202,8 @@ class SnapshotTable:
                     "re-read the table and retry"
                 )
             parent = self._state_at(head_v)[0] if head_v >= 0 else None
-            rec = dict(record)
-            if parent:
-                # CHECK constraints are table-level metadata: every
-                # commit inherits the parent's set unless it explicitly
-                # changes it.  DV sidecars inherit the same way (their
-                # entries are keyed by data-file path, so entries whose
-                # file left the version's file set never match at read
-                # time); delete_where(mode="dv") extends the list
-                # explicitly, rollback restores the target's.  ANN
-                # quantizer metadata inherits until a retrain replaces
-                # it.  Per-FILE manifests (stats/bloom/ann clusters)
-                # live in parquet sidecars keyed by directory — nothing
-                # O(#files) is ever copied forward (VERDICT r8 #2).
-                # ann_gen{s}/ann_codebooks: per-directory codebook
-                # generations from a partial retrain inherit alongside
-                # the quantizer itself (entries keyed by directories no
-                # longer in the file set are inert at read time, and
-                # compact/retrain rewrite the maps explicitly)
-                for k in (
-                    "constraints",
-                    "dvs",
-                    "ann",
-                    "ann_gens",
-                    "ann_codebooks",
-                    "ann_gen",
-                ):
-                    if k not in rec and parent.get(k):
-                        rec[k] = parent[k]
             n = head_v + 1
-            seg = self._make_seg(parent, rec, n, time.time())
+            seg = self._make_seg(parent, record, n, time.time())
             data = json.dumps(seg, separators=(",", ":")).encode()
             if not _during_vacuum and self.protocol.exists(
                 self._VACUUM_LOCK
@@ -1214,8 +1219,8 @@ class SnapshotTable:
                 continue
             if not self.protocol.put_if_absent(self._seg_key(n), data):
                 # someone published n first: loop — the CAS check above
-                # raises for content-dependent callers, append-style
-                # callers rebuild against the fresh head
+                # then raises (without expected_parent the record lands
+                # on the fresh head)
                 continue
             if n > 0 and n % self.CHECKPOINT_EVERY == 0:
                 # checkpoints are an optimization: only version n's
@@ -1251,6 +1256,159 @@ class SnapshotTable:
                 d = f"{base}_{i}"
                 continue
             return d
+
+    @contextlib.contextmanager
+    def _staging(self):
+        """Scope of one mutation's staged directories, yielded as
+        {dir: schema written (None for a DV sidecar)}.  `_publish`
+        takes the dirs its record references out of it; on leaving the
+        scope every dir still in it is removed with its manifest and
+        claim — all of them when the mutation raised or published
+        nothing."""
+        staged: dict = {}
+        try:
+            yield staged
+        finally:
+            for d in staged:
+                self._remove_dir(d)
+
+    def _stage(
+        self,
+        staged: dict,
+        spark: SparkSession,
+        kind: str,
+        df: DataFrame,
+        ann_cents=None,
+        sidecar: bool = False,
+    ) -> str:
+        """Write `df` as a new `kind` directory of this mutation, plus
+        its manifest sidecar — except for a DV `sidecar`, which has no
+        manifest and no per-directory schema entry."""
+        schema = None if sidecar else df.schema
+        d = self._new_dir(kind)
+        staged[d] = schema
+        df.write.mode("errorifexists").parquet(d)
+        if not sidecar:
+            self._write_manifest(spark, d, ann_cents)
+        return d
+
+    def _dir_meta(
+        self, parent_rec: dict, files: list[str], staged: dict | None = None
+    ) -> dict:
+        """Per-directory physical-schema bookkeeping of a record whose
+        file list is `files`: `dir_columns` (physical column names),
+        `dir_schema_json` (physical types as written), and — after a
+        rename — `dir_logical_columns` (what each physical column is
+        CALLED under the current logical schema).  Directories the
+        parent had keep their entries; a staged directory records the
+        schema it was physically written with."""
+        keep = set(files)
+        dc, ds, dl = (
+            {k: v for k, v in (parent_rec.get(key) or {}).items() if k in keep}
+            for key in self._DIR_KEYS
+        )
+        for d, schema in (staged or {}).items():
+            if schema is not None and d in keep:
+                dc[d] = list(schema.names)
+                ds[d] = json.dumps(schema.jsonValue())
+        out = {"dir_columns": dc, "dir_schema_json": ds}
+        if dl:
+            out["dir_logical_columns"] = dl
+        return out
+
+    def _record(
+        self, parent: dict | None, changes: dict, staged: dict
+    ) -> dict:
+        """The carry-over rule: the record is `changes` (operation,
+        files and the metadata the mutation changes) plus every
+        non-empty parent metadata key — schema, constraints, DV
+        sidecars, ANN quantizer and codebook generations — except the
+        per-commit `batch_id` and `renames`.  The `dir_*` maps are
+        derived (_dir_meta) unless the mutation sets them.  Per-FILE
+        manifests live in sidecars keyed by directory, so nothing
+        O(#files) is copied forward; DV entries and ann_gens keyed by
+        dirs that left the file set are inert at read time."""
+        parent = parent or {}
+        rec = dict(changes)
+        if "dir_columns" not in rec and ("columns" in rec or "columns" in parent):
+            meta = self._dir_meta(parent, rec["files"], staged)
+            if "schema_json" in rec:
+                # the dir maps sit right after the schema the mutation
+                # sets: key order fixes the published segment's bytes
+                lead = list(rec)[: list(rec).index("schema_json") + 1]
+                rec = {**{k: rec.pop(k) for k in lead}, **meta, **rec}
+            else:
+                rec.update(meta)
+        skip = {*self._SEG_OWNED, *self._PER_COMMIT, *self._DIR_KEYS}
+        for k, v in parent.items():
+            if v and k not in rec and k not in skip:
+                rec[k] = v
+        return rec
+
+    def _publish(
+        self,
+        head: dict | None,
+        changes,
+        staged: dict | None = None,
+        rebase: DataFrame | None = None,
+        expected_parent: int | None = None,
+        _during_vacuum: bool = False,
+    ) -> int | None:
+        """Publish a mutation's record; `head` is the head record it
+        read and `staged` its `_staging()` scope.
+
+        Content-dependent mutations pass `changes` as a dict and CAS on
+        `head["version"]`: a moved head raises ConcurrentWriteError.
+
+        Order-independent writers pass `rebase=` the DataFrame they
+        wrote and `changes` as a function of the parent record: each of
+        up to APPEND_RETRIES attempts rebuilds the record against the
+        LIVE head, first re-validating the DataFrame against
+        constraints added since `head` (a concurrent add_constraint
+        moves the head without conflicting, and the carried constraint
+        would otherwise cover rows it never checked).  `changes`
+        returning None ends the publish with None (a replayed stream
+        batch).  `expected_parent` pins the CAS instead (commit's
+        option)."""
+        staged = {} if staged is None else staged
+
+        def land(rec: dict, cas: int) -> int:
+            v = self._append_log(rec, cas, _during_vacuum)
+            for d in rec["files"] + list(rec.get("dvs") or []):
+                staged.pop(d, None)  # published: never removed
+            return v
+
+        if rebase is None:
+            return land(self._record(head, changes, staged), head["version"])
+        validated = dict((head or {}).get("constraints") or {})
+        for _ in range(self.APPEND_RETRIES):
+            state = self._head_state()
+            parent = state[0] if state else None
+            want = changes(parent)
+            if want is None:
+                return None
+            added = {
+                n: e
+                for n, e in ((parent or {}).get("constraints") or {}).items()
+                if validated.get(n) != e
+            }
+            self._validate(rebase, added)
+            validated.update(added)
+            live = parent["version"] if parent else -1
+            try:
+                return land(
+                    self._record(parent, want, staged),
+                    live if expected_parent is None else expected_parent,
+                )
+            except StaleCommitMarkerError:
+                raise
+            except ConcurrentWriteError:
+                if expected_parent is not None:
+                    raise
+        raise ConcurrentWriteError(
+            f"snapshot table {self.root}: {want['operation']} lost the "
+            f"commit race {self.APPEND_RETRIES} times in a row"
+        )
 
     def _stats_for(self, d: str) -> dict:
         cols = self._live_cols(self.stat_cols)
@@ -1443,8 +1601,8 @@ class SnapshotTable:
         )
 
     def _remove_dir(self, d: str) -> None:
-        """Drop an orphaned snapshot directory AND its sidecar + name
-        claim (conflict-loser cleanup and vacuum both land here)."""
+        """Drop an unpublished snapshot directory AND its sidecar + name
+        claim (the `_staging()` scope's cleanup)."""
         import shutil
 
         shutil.rmtree(d, ignore_errors=True)
@@ -1558,14 +1716,18 @@ class SnapshotTable:
         return cluster_order(df, cents, col, self.ann_files), cents
 
     def _ann_meta(self, cents) -> dict:
-        """The commit record's ann fragment: quantizer METADATA only
-        (centroids, column, id column) — O(C x d), independent of the
-        number of files.  Per-file cluster sets live in each
-        directory's manifest sidecar (VERDICT r8 #2)."""
+        """The commit record's ann fragment ({} without centroids):
+        quantizer METADATA only (centroids, column, id column) —
+        O(C x d), independent of the number of files.  Per-file cluster
+        sets live in each directory's manifest sidecar."""
+        if cents is None:
+            return {}
         return {
-            "centroids": [list(c) for c in cents],
-            "col": self._ann_live_col(),
-            "id_col": self.ann_id_col,
+            "ann": {
+                "centroids": [list(c) for c in cents],
+                "col": self._ann_live_col(),
+                "id_col": self.ann_id_col,
+            }
         }
 
     def ann_file_clusters(self, version: int | None = None) -> dict:
@@ -1573,9 +1735,7 @@ class SnapshotTable:
         the directories' manifest sidecars — files written by paths
         that do not re-cluster (CoW merge/delete) have no entry and
         are conservatively read at knn time."""
-        rec = self._rec_at(
-            self._head_version() if version is None else version
-        )
+        rec = self._head(version)
         out: dict[str, list[int]] = {}
         for d in rec["files"]:
             for f, e in self._manifest_for(d)["ann"].items():
@@ -1587,9 +1747,7 @@ class SnapshotTable:
         assembled from manifest sidecars with per-directory physical →
         logical name translation — the audit view of what `between=`
         pruning sees."""
-        rec = self._rec_at(
-            self._head_version() if version is None else version
-        )
+        rec = self._head(version)
         out: dict[str, dict] = {}
         for d in rec["files"]:
             dl = (rec.get("dir_logical_columns") or {}).get(d)
@@ -1624,9 +1782,7 @@ class SnapshotTable:
         from dbt_lab_spark.llm.similarity import ivf_knn
         from dbt_lab_spark.plans import ann as _ann
 
-        rec = self._rec_at(
-            self._head_version() if version is None else version
-        )
+        rec = self._head(version)
         meta = rec.get("ann")
         if not meta:
             raise ValueError(
@@ -1719,9 +1875,7 @@ class SnapshotTable:
         file-skipping audit number."""
         from dbt_lab_spark.plans import ann as _ann
 
-        rec = self._rec_at(
-            self._head_version() if version is None else version
-        )
+        rec = self._head(version)
         meta = rec.get("ann") or {}
         if not meta.get("centroids"):
             raise ValueError(f"snapshot table {self.root}: no ANN index")
@@ -1814,9 +1968,7 @@ class SnapshotTable:
         than the quantizer's training distribution did is the one
         worth re-clustering.  Directories without recorded ANN entries
         report +inf (always drifted)."""
-        rec = self._rec_at(
-            self._head_version() if version is None else version
-        )
+        rec = self._head(version)
         sims = self._ann_dir_sims(rec)
         known = [s for s in sims.values() if s is not None]
         if not known:
@@ -1839,9 +1991,7 @@ class SnapshotTable:
         latest drops below base; retrain via
         compact(retrain_ann=True) when staleness exceeds your recall
         budget (measured in ANN_SCALE_r9.txt)."""
-        rec = self._rec_at(
-            self._head_version() if version is None else version
-        )
+        rec = self._head(version)
         per_dir: list[float] = []
         for d in rec["files"]:
             sims = [
@@ -1859,43 +2009,6 @@ class SnapshotTable:
             "latest_mean_sim": latest,
             "staleness": max(0.0, base - latest),
         }
-
-    def _dir_meta(
-        self,
-        parent_rec: dict,
-        keep_dirs: list[str],
-        new_dir: str | None = None,
-        new_schema=None,
-    ) -> dict:
-        """Per-directory physical-schema bookkeeping carried by every
-        commit: `dir_columns` (physical column names), `dir_schema_json`
-        (physical types as written), and — after a rename —
-        `dir_logical_columns` (what each physical column is CALLED under
-        the current logical schema).  Kept directories inherit their
-        entries; a newly written directory records the schema it was
-        physically written with."""
-        dc = {
-            k: v
-            for k, v in (parent_rec.get("dir_columns") or {}).items()
-            if k in keep_dirs
-        }
-        ds = {
-            k: v
-            for k, v in (parent_rec.get("dir_schema_json") or {}).items()
-            if k in keep_dirs
-        }
-        dl = {
-            k: v
-            for k, v in (parent_rec.get("dir_logical_columns") or {}).items()
-            if k in keep_dirs
-        }
-        if new_dir is not None:
-            dc[new_dir] = list(new_schema.names)
-            ds[new_dir] = json.dumps(new_schema.jsonValue())
-        out = {"dir_columns": dc, "dir_schema_json": ds}
-        if dl:
-            out["dir_logical_columns"] = dl
-        return out
 
     @staticmethod
     def _norm_file_col(col):
@@ -2096,10 +2209,7 @@ class SnapshotTable:
         validated now — adding a constraint a current row violates is
         an error, the ALTER TABLE ADD CONSTRAINT contract.  SQL
         semantics: a row passes when the expression is true OR NULL."""
-        head_state = self._head_state()
-        if head_state is None:
-            raise ValueError(f"snapshot table {self.root} has no commits")
-        head = head_state[0]
+        head = self._head()
         cons = dict(head.get("constraints") or {})
         if name in cons:
             raise ValueError(f"constraint {name!r} already exists")
@@ -2107,38 +2217,29 @@ class SnapshotTable:
             self._read_paths(spark, head, head["files"]), {name: sql_expr}
         )
         cons[name] = sql_expr
-        rec = {
-            "operation": f"add_constraint({name})",
-            "files": list(head["files"]),
-            "constraints": cons,
-        }
-        if "columns" in head:
-            rec["columns"] = list(head["columns"])
-            if "schema_json" in head:
-                rec["schema_json"] = head["schema_json"]
-            rec.update(self._dir_meta(head, head["files"]))
-        return self._append_log(rec, expected_parent=head["version"])
+        return self._publish(
+            head,
+            {
+                "operation": f"add_constraint({name})",
+                "files": list(head["files"]),
+                "constraints": cons,
+            },
+        )
 
     def drop_constraint(self, name: str) -> int:
-        head_state = self._head_state()
-        if head_state is None:
-            raise ValueError(f"snapshot table {self.root} has no commits")
-        head = head_state[0]
+        head = self._head()
         cons = dict(head.get("constraints") or {})
         if name not in cons:
             raise ValueError(f"no constraint {name!r}")
         del cons[name]
-        rec = {
-            "operation": f"drop_constraint({name})",
-            "files": list(head["files"]),
-            "constraints": cons,
-        }
-        if "columns" in head:
-            rec["columns"] = list(head["columns"])
-            if "schema_json" in head:
-                rec["schema_json"] = head["schema_json"]
-            rec.update(self._dir_meta(head, head["files"]))
-        return self._append_log(rec, expected_parent=head["version"])
+        return self._publish(
+            head,
+            {
+                "operation": f"drop_constraint({name})",
+                "files": list(head["files"]),
+                "constraints": cons,
+            },
+        )
 
     def _validate(self, df: DataFrame, constraints: dict[str, str]) -> None:
         """Raise on the first constraint any incoming row violates —
@@ -2155,10 +2256,6 @@ class SnapshotTable:
                     f"row {tuple(bad[0])}"
                 )
 
-    def _head_constraints(self) -> dict[str, str]:
-        head = self._head_state()
-        return dict(head[0].get("constraints") or {}) if head else {}
-
     def commit(
         self,
         df: DataFrame,
@@ -2171,72 +2268,27 @@ class SnapshotTable:
         default it never conflicts; pass `expected_parent` to CAS
         against a specific head (append's empty-table path uses -1 so
         a racing first commit isn't silently replaced)."""
-        validated_cons = self._head_constraints()
-        self._validate(df, validated_cons)
+        state = self._head_state()
+        head = state[0] if state else None
+        self._validate(df, (head or {}).get("constraints"))
         df, ann_cents = self._ann_stage(df)
-        d = self._new_dir("full")
-        df.write.mode("errorifexists").parquet(d)
-        self._write_manifest(df.sparkSession, d, ann_cents)
-        rec = {
-            "operation": operation,
-            "files": [d],
-            "columns": list(df.columns),
-            "schema_json": json.dumps(df.schema.jsonValue()),
-            **self._dir_meta({}, [], d, df.schema),
-            **(record_extra or {}),
-        }
-        if ann_cents is not None:
-            rec["ann"] = self._ann_meta(ann_cents)
-        # bounded retries (ADVICE r9: the old `while True` livelocked a
-        # full-replace writer under sustained contention with no
-        # diagnostic) — same budget as append()'s rebase loop.
-        for _ in range(self.APPEND_RETRIES):
-            head_v = self._head_version()
-            # RE-VALIDATE against any constraint added between this
-            # commit's validation and its publish.  The rebase here is
-            # implicit — expected_parent=None CAS-es against the LIVE
-            # head, so a concurrent add_constraint moves the head
-            # WITHOUT ever raising ConcurrentWriteError for us; diffing
-            # the head's constraint set against the validated one is
-            # the only way to notice (r9 review #6 / test_wave41:
-            # _append_log's inheritance would otherwise stamp the new
-            # constraint onto rows it never checked).
-            cur_cons = self._head_constraints()
-            added = {
-                n: e
-                for n, e in cur_cons.items()
-                if validated_cons.get(n) != e
+        with self._staging() as staged:
+            d = self._stage(staged, df.sparkSession, "full", df, ann_cents)
+            rec = {
+                "operation": operation,
+                "files": [d],
+                "columns": list(df.columns),
+                "schema_json": json.dumps(df.schema.jsonValue()),
+                **(record_extra or {}),
+                **self._ann_meta(ann_cents),
             }
-            if added:
-                try:
-                    self._validate(df, added)
-                except Exception:
-                    self._remove_dir(d)
-                    raise
-                validated_cons = cur_cons
-            cas = expected_parent if expected_parent is not None else head_v
-            try:
-                return self._append_log(rec, expected_parent=cas)
-            except StaleCommitMarkerError:
-                self._remove_dir(d)
-                raise
-            except ConcurrentWriteError:
-                if expected_parent is not None:
-                    # conflicting commit won (append's
-                    # racing-first-commit path reaches here): drop the
-                    # unreferenced snapshot dir like the other DML
-                    # paths do instead of leaving an orphan until
-                    # vacuum (ADVICE r8)
-                    self._remove_dir(d)
-                    raise
-                # head moved between our head read and the CAS: loop —
-                # the constraint diff at the top of the loop re-checks
-                # whatever landed.
-        self._remove_dir(d)
-        raise ConcurrentWriteError(
-            f"snapshot table {self.root}: commit lost the publish race "
-            f"{self.APPEND_RETRIES} times in a row"
-        )
+            return self._publish(
+                head,
+                lambda parent: rec,
+                staged,
+                rebase=df,
+                expected_parent=expected_parent,
+            )
 
     # commit-rebase attempts for append-only writers before giving up
     # (each retry means another writer just committed; starvation needs
@@ -2256,46 +2308,32 @@ class SnapshotTable:
         the exact union (pinned in tests/test_wave37.py); conflicts
         with content-dependent DML are surfaced by THAT operation, not
         this one."""
-        d: str | None = None
-        ann_cents = None
-        for _ in range(self.APPEND_RETRIES):
-            head_state = self._head_state()
-            if head_state is None:
-                try:
-                    return self.commit(
-                        batch, operation="append", expected_parent=-1
-                    )
-                except StaleCommitMarkerError:
-                    raise
-                except ConcurrentWriteError:
-                    continue  # another writer created v0: retry as delta
-            self._validate(batch, self._head_constraints())
-            if d is None:
-                batch, ann_cents = self._ann_stage(batch)
-                d = self._new_dir("delta")
-                batch.write.mode("errorifexists").parquet(d)
-                self._write_manifest(batch.sparkSession, d, ann_cents)
-            head = head_state[0]
-            rec = {
-                "operation": "append",
-                "files": head["files"] + [d],
-                **self._evolved_schema(head, batch),
-                **self._dir_meta(head, head["files"], d, batch.schema),
-            }
-            if ann_cents is not None:
-                rec["ann"] = self._ann_meta(ann_cents)
+        if self._head_version() < 0:
             try:
-                return self._append_log(rec, expected_parent=head["version"])
+                return self.commit(
+                    batch, operation="append", expected_parent=-1
+                )
             except StaleCommitMarkerError:
                 raise
             except ConcurrentWriteError:
-                continue
-        if d is not None:
-            self._remove_dir(d)
-        raise ConcurrentWriteError(
-            f"snapshot table {self.root}: append lost the commit race "
-            f"{self.APPEND_RETRIES} times in a row"
-        )
+                pass  # another writer created v0: append as a delta
+        head = self._head()
+        self._validate(batch, head.get("constraints"))
+        batch, ann_cents = self._ann_stage(batch)
+        ann = self._ann_meta(ann_cents)
+        with self._staging() as staged:
+            d = self._stage(staged, batch.sparkSession, "delta", batch, ann_cents)
+            return self._publish(
+                head,
+                lambda parent: {
+                    "operation": "append",
+                    "files": parent["files"] + [d],
+                    **self._evolved_schema(parent, batch),
+                    **ann,
+                },
+                staged,
+                rebase=batch,
+            )
 
     def rollback(self, version: int) -> int:
         """Commit a new version whose file set IS an old version's —
@@ -2312,17 +2350,8 @@ class SnapshotTable:
         OUTSIDE the recent heads, so it holds the vacuum lock from
         target-read to publish — a concurrent vacuum can then never
         delete the target's directories between the two (ADVICE r8)."""
-        while not self.protocol.put_if_absent(self._VACUUM_LOCK, b"rollback"):
-            age = self._vacuum_lock_age()
-            if age is not None and age > self.VACUUM_LOCK_STALE_S:
-                raise StaleCommitMarkerError(
-                    f"snapshot table {self.root}: vacuum lock "
-                    f"{self._VACUUM_LOCK} is {age:.0f}s old — a vacuum "
-                    "crashed; delete the lock file to recover"
-                )
-            time.sleep(0.02)
+        self._acquire_vacuum_lock(b"rollback")
         try:
-            head_v = self._head_version()
             target = self._rec_at(version)
             rec = {
                 "operation": f"rollback({version})",
@@ -2345,9 +2374,7 @@ class SnapshotTable:
             # the target read can take a while, and waiters judge the
             # lock by its mtime (ADVICE r9)
             self._refresh_vacuum_lock(b"rollback")
-            return self._append_log(
-                rec, expected_parent=head_v, _during_vacuum=True
-            )
+            return self._publish(self._head(), rec, _during_vacuum=True)
         finally:
             self.protocol.delete(self._VACUUM_LOCK)
 
@@ -2391,10 +2418,7 @@ class SnapshotTable:
         reads cast per generation either way."""
         from pyspark.sql import types as T
 
-        head_state = self._head_state()
-        if head_state is None:
-            raise ValueError(f"snapshot table {self.root} has no commits")
-        head = head_state[0]
+        head = self._head()
         if "schema_json" not in head:
             raise ValueError("evolve: table has no recorded schema")
         schema = T.StructType.fromJson(json.loads(head["schema_json"]))
@@ -2525,7 +2549,7 @@ class SnapshotTable:
                     head["ann"].get("id_col"), head["ann"].get("id_col")
                 ),
             }
-        return self._append_log(rec, expected_parent=head["version"])
+        return self._publish(head, rec)
 
     def append_stream_batch(self, batch: DataFrame, batch_id: int) -> int | None:
         """Idempotent foreachBatch sink: commit the micro-batch as a
@@ -2534,51 +2558,35 @@ class SnapshotTable:
         recording the id in the log turns at-least-once delivery into
         exactly-once table contents.  Returns the new version, or None
         for a replayed no-op."""
-        d: str | None = None
-        ann_cents = None
-        for _ in range(self.APPEND_RETRIES):
-            head_state = self._head_state()
-            # the batch_id re-check lives INSIDE the retry loop: two
+        if self._batch_committed(batch_id):
+            return None
+        state = self._head_state()
+        head = state[0] if state else None
+        self._validate(batch, (head or {}).get("constraints"))
+        batch, ann_cents = self._ann_stage(batch)
+        ann = self._ann_meta(ann_cents)
+
+        def changes(parent):
+            # the batch_id re-check rides every publish attempt: two
             # concurrent replays of the same batch race their commits,
             # and the loser must observe the winner's record, not
             # double-apply.  The fold carries the CUMULATIVE id set
             # through checkpoints, so the check also survives vacuum.
             if self._batch_committed(batch_id):
-                if d is not None:  # loser replay: drop its orphan
-                    self._remove_dir(d)
                 return None
-            self._validate(batch, self._head_constraints())
-            if d is None:
-                batch, ann_cents = self._ann_stage(batch)
-                d = self._new_dir("full" if head_state is None else "delta")
-                batch.write.mode("errorifexists").parquet(d)
-                self._write_manifest(batch.sparkSession, d, ann_cents)
-            parent_rec = head_state[0] if head_state else {}
-            parent_files = parent_rec.get("files") or []
-            rec = {
+            parent = parent or {}
+            return {
                 "operation": "stream",
                 "batch_id": batch_id,
-                "files": parent_files + [d],
-                **self._evolved_schema(parent_rec, batch),
-                **self._dir_meta(parent_rec, parent_files, d, batch.schema),
+                "files": (parent.get("files") or []) + [d],
+                **self._evolved_schema(parent, batch),
+                **ann,
             }
-            if ann_cents is not None:
-                rec["ann"] = self._ann_meta(ann_cents)
-            try:
-                return self._append_log(
-                    rec,
-                    expected_parent=(
-                        parent_rec["version"] if head_state else -1
-                    ),
-                )
-            except StaleCommitMarkerError:
-                raise
-            except ConcurrentWriteError:
-                continue
-        raise ConcurrentWriteError(
-            f"snapshot table {self.root}: stream batch {batch_id} lost "
-            f"the commit race {self.APPEND_RETRIES} times in a row"
-        )
+
+        with self._staging() as staged:
+            kind = "full" if head is None else "delta"
+            d = self._stage(staged, batch.sparkSession, kind, batch, ann_cents)
+            return self._publish(head, changes, staged, rebase=batch)
 
     def merge_stream_batch(
         self,
@@ -2696,25 +2704,21 @@ class SnapshotTable:
         O(matching files) instead of O(table)."""
         from pyspark.sql import functions as F
 
-        vs = self.versions()
-        if not vs:
-            raise ValueError(f"snapshot table {self.root} has no commits")
         if as_of is not None:
             if version is not None:
                 raise ValueError("read: pass version= or as_of=, not both")
             epoch = self._as_of_epoch(as_of)
             # resolve over (version, ts) pairs — record TIMESTAMPS are
             # one small field per retained record file, no folding
-            vts = [(v, self._read_seg(v)["ts"]) for v in vs]
+            vts = [(v, self._read_seg(v)["ts"]) for v in self.versions()]
             eligible = [v for v, ts in vts if ts <= epoch]
-            if not eligible:
+            if vts and not eligible:
                 raise ValueError(
                     f"snapshot table {self.root}: as_of={as_of!r} predates "
                     f"the first commit (ts={vts[0][1]})"
                 )
-            rec = self._rec_at(eligible[-1])
-        else:
-            rec = self._rec_at(vs[-1] if version is None else version)
+            version = eligible[-1] if eligible else None
+        rec = self._head(version)
         if between is None and point is None:
             return self._read_paths(spark, rec, rec["files"])
         if point is not None:
@@ -2925,9 +2929,7 @@ class SnapshotTable:
     ) -> tuple[int, int]:
         """(files kept, files total) for a `between` read — the
         data-skipping audit number."""
-        rec = self._rec_at(
-            self._head_version() if version is None else version
-        )
+        rec = self._head(version)
         col, lo, hi = between
         total = sum(len(self._data_files(d)) for d in rec["files"])
         kept = len(self._prune(None, rec, "minmax", col, (lo, hi)))
@@ -2938,9 +2940,7 @@ class SnapshotTable:
     ) -> tuple[int, int]:
         """(files kept, files total) for a `point=` Bloom lookup — the
         point-skipping audit number."""
-        rec = self._rec_at(
-            self._head_version() if version is None else version
-        )
+        rec = self._head(version)
         pcol, pv = point
         total = sum(len(self._data_files(d)) for d in rec["files"])
         kept = len(self._prune(None, rec, "bloom", pcol, (pv,)))
@@ -3018,10 +3018,7 @@ class SnapshotTable:
                 "compact: retrain_ann re-clusters by the new centroids — "
                 "order_by/zorder cannot also apply"
             )
-        head_state = self._head_state()
-        if head_state is None:
-            raise ValueError(f"snapshot table {self.root} has no commits")
-        head = head_state[0]
+        head = self._head()
         target = int(target_mb * 1024 * 1024)
 
         def dir_bytes(d: str) -> int:
@@ -3085,7 +3082,6 @@ class SnapshotTable:
         keep = [d for d in head["files"] if d not in small]
         total = sum(dir_bytes(d) for d in small)
         n_out = n_files if n_files else max(1, math.ceil(total / target))
-        d = self._new_dir("compact")
         src = self._read_paths(spark, head, small)
         ann_meta = None  # set only when the rewrite is ANN-(re)clustered
         if retrain_ann:
@@ -3115,8 +3111,6 @@ class SnapshotTable:
             )
             ann_meta = {**head["ann"], "centroids": [list(c) for c in cents]}
             src = cluster_order(src, cents, col, n_out)
-        if retrain_ann:
-            pass  # already re-clustered above
         elif zorder:
             # Z-order clustering: quantile-bucket each column (skew-
             # robust), interleave the bucket bits into one sort key,
@@ -3166,21 +3160,6 @@ class SnapshotTable:
             # coalesce, not repartition: bin-packing needs no shuffle,
             # just fewer write tasks reading the small files back.
             src = src.coalesce(n_out)
-        src.write.mode("errorifexists").parquet(d)
-        # the rewrite's manifest sidecar records fresh stats/blooms —
-        # and, for an ANN-clustered rewrite, the new dir's per-file
-        # cluster sets, so knn pruning survives the compaction
-        self._write_manifest(
-            spark, d, ann_meta["centroids"] if ann_meta is not None else None
-        )
-        rec = {
-            "operation": (
-                "compact(retrain_ann)"
-                if retrain_ann
-                else f"compact(target_mb={target_mb})"
-            ),
-            "files": keep + [d],
-        }
         # DV lifecycle (r9 review): the rewrite reads through the
         # DV-applied view, physically excluding deleted rows for the
         # rewritten dirs — a sidecar whose targets all lived there is
@@ -3207,11 +3186,11 @@ class SnapshotTable:
                     for k in kept_canon
                 ):
                     live_dvs.append(dvd)
-        rec["dvs"] = live_dvs
+        meta: dict = {"dvs": live_dvs}
         if retrain_ann:
-            rec["ann"] = ann_meta  # the NEW quantizer replaces the old
+            meta["ann"] = ann_meta  # the NEW quantizer replaces the old
             old_gen = int(head.get("ann_gen", 0))
-            rec["ann_gen"] = old_gen + 1
+            meta["ann_gen"] = old_gen + 1
             if only_drifted is not None and keep:
                 # partial retrain: carried dirs stay pinned to the
                 # codebook generation they were clustered under; the
@@ -3224,37 +3203,45 @@ class SnapshotTable:
                     str(old_gen): head["ann"]["centroids"],
                 }
                 used = {str(g) for g in gmap.values()}
-                rec["ann_gens"] = gmap
-                rec["ann_codebooks"] = {
+                meta["ann_gens"] = gmap
+                meta["ann_codebooks"] = {
                     g: b for g, b in books.items() if g in used
                 }
             else:
                 # full retrain: one generation again — clear the maps
                 # explicitly so inheritance doesn't resurrect them
-                rec["ann_gens"] = {}
-                rec["ann_codebooks"] = {}
+                meta["ann_gens"] = {}
+                meta["ann_codebooks"] = {}
         elif head.get("ann_gens"):
             # plain compaction on a multi-generation table: the
             # rewritten dir is clustered under the LATEST codebook
             # (unmapped); carried dirs keep their pins, compacted-away
             # dirs drop out of the map
-            rec["ann_gens"] = {
+            meta["ann_gens"] = {
                 d: g
                 for d, g in head["ann_gens"].items()
                 if d in keep
             }
-        if "columns" in head:
-            rec["columns"] = list(head["columns"])
-            if "schema_json" in head:
-                rec["schema_json"] = head["schema_json"]
+        op = (
+            "compact(retrain_ann)"
+            if retrain_ann
+            else f"compact(target_mb={target_mb})"
+        )
+        with self._staging() as staged:
             # the rewrite materializes through _read_paths, so the new
-            # dir is physically on the LOGICAL schema
-            rec.update(self._dir_meta(head, keep, d, src.schema))
-        try:
-            return self._append_log(rec, expected_parent=head["version"])
-        except ConcurrentWriteError:
-            self._remove_dir(d)
-            raise
+            # dir is physically on the LOGICAL schema; its manifest
+            # records fresh stats/blooms and, for an ANN-clustered
+            # rewrite, the per-file cluster sets knn pruning needs
+            d = self._stage(
+                staged,
+                spark,
+                "compact",
+                src,
+                ann_meta["centroids"] if ann_meta is not None else None,
+            )
+            return self._publish(
+                head, {"operation": op, "files": keep + [d], **meta}, staged
+            )
 
     # write-side DV budget (VERDICT r7 #2): a dv-mode DELETE/MERGE whose
     # matched-row count exceeds this auto-materializes via scoped CoW
@@ -3314,10 +3301,7 @@ class SnapshotTable:
         Returns {"version", "n_dirs_rewritten", "n_dirs_total"}."""
         from pyspark.sql import functions as F
 
-        head_state = self._head_state()
-        if head_state is None:
-            raise ValueError(f"snapshot table {self.root} has no commits")
-        head = head_state[0]
+        head = self._head()
         dup_err = "merge: source has duplicate keys for ON columns"
         table_cols = head.get("columns")
         if table_cols is not None and set(source.columns) != set(table_cols):
@@ -3346,7 +3330,7 @@ class SnapshotTable:
                 )
         if mode not in ("cow", "dv"):
             raise ValueError(f"merge: unknown mode {mode!r}")
-        self._validate(source, self._head_constraints())
+        self._validate(source, head.get("constraints"))
         dv_budget = self.DV_WRITE_MAX_ROWS if max_dv_rows is None else max_dv_rows
         dv_fallback = False
         if mode == "dv":
@@ -3364,53 +3348,33 @@ class SnapshotTable:
                     F.col("__ri").alias("ri"),
                 )
             )
-            dv_dir = self._new_dir("dv")
-            matched.write.mode("errorifexists").parquet(dv_dir)
-            n_updated = _dir_num_rows(dv_dir)
-            if n_updated > dv_budget:
+            with self._staging() as staged:
+                dv_dir = self._stage(staged, spark, "dv", matched, sidecar=True)
+                n_updated = _dir_num_rows(dv_dir)
                 # DV size policy (VERDICT r7 #2): a mass update is
                 # cheaper materialized once (scoped CoW below) than
-                # tombstoned and anti-joined on every later read
-                self._remove_dir(dv_dir)
-                dv_fallback = True
-            else:
-                dvs = list(head.get("dvs") or [])
-                if n_updated:
-                    dvs.append(dv_dir)
-                else:  # pure insert: no tombstones, drop the empty sidecar
-                    self._remove_dir(dv_dir)
-                d = self._new_dir("delta")
-                source.write.mode("errorifexists").parquet(d)
-                self._write_manifest(spark, d)
-                rec = {
-                    "operation": f"merge(on={on}, mode=dv)",
-                    "files": head["files"] + [d],
-                    "dvs": dvs,
-                    **(record_extra or {}),
-                }
-                if table_cols is not None:
-                    rec["columns"] = list(table_cols)
-                    if "schema_json" in head:
-                        rec["schema_json"] = head["schema_json"]
-                    rec.update(
-                        self._dir_meta(head, head["files"], d, source.schema)
+                # tombstoned and anti-joined on every later read; a pure
+                # insert records no (empty) sidecar
+                dv_fallback = n_updated > dv_budget
+                if not dv_fallback:
+                    d = self._stage(staged, spark, "delta", source)
+                    v = self._publish(
+                        head,
+                        {
+                            "operation": f"merge(on={on}, mode=dv)",
+                            "files": head["files"] + [d],
+                            "dvs": list(head.get("dvs") or [])
+                            + ([dv_dir] if n_updated else []),
+                            **(record_extra or {}),
+                        },
+                        staged,
                     )
-                try:
-                    v = self._append_log(
-                        rec, expected_parent=head["version"]
-                    )
-                except ConcurrentWriteError:
-                    # conflicting commit won: drop our unreferenced dirs
-                    self._remove_dir(d)
-                    if n_updated:
-                        self._remove_dir(dv_dir)
-                    raise
-                return {
-                    "version": v,
-                    "n_dirs_rewritten": 0,
-                    "n_dirs_total": len(head["files"]),
-                    "n_updated": int(n_updated),
-                }
+                    return {
+                        "version": v,
+                        "n_dirs_rewritten": 0,
+                        "n_dirs_total": len(head["files"]),
+                        "n_updated": int(n_updated),
+                    }
         probe = (
             source.groupBy(*on)
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -3437,29 +3401,18 @@ class SnapshotTable:
             if touched
             else source
         )
-        d = self._new_dir("merge")
-        new_rows.write.mode("errorifexists").parquet(d)
-        self._write_manifest(spark, d)
         op = (
             f"merge(on={on}, mode=dv->cow: matched rows > max_dv_rows)"
             if dv_fallback
             else f"merge(on={on})"
         )
-        rec = {
-            "operation": op,
-            "files": untouched + [d],
-            **(record_extra or {}),
-        }
-        if table_cols is not None:
-            rec["columns"] = list(table_cols)
-            if "schema_json" in head:
-                rec["schema_json"] = head["schema_json"]
-            rec.update(self._dir_meta(head, untouched, d, new_rows.schema))
-        try:
-            v = self._append_log(rec, expected_parent=head["version"])
-        except ConcurrentWriteError:
-            self._remove_dir(d)
-            raise
+        with self._staging() as staged:
+            d = self._stage(staged, spark, "merge", new_rows)
+            v = self._publish(
+                head,
+                {"operation": op, "files": untouched + [d], **(record_extra or {})},
+                staged,
+            )
         return {
             "version": v,
             "n_dirs_rewritten": len(touched),
@@ -3507,15 +3460,18 @@ class SnapshotTable:
         mode by construction."""
         from pyspark.sql import functions as F
 
-        head_state = self._head_state()
-        if head_state is None:
-            raise ValueError(f"snapshot table {self.root} has no commits")
-        head = head_state[0]
+        head = self._head()
         cond = F.expr(condition) if isinstance(condition, str) else condition
         if mode not in ("cow", "dv"):
             raise ValueError(f"delete_where: unknown mode {mode!r}")
         dv_budget = self.DV_WRITE_MAX_ROWS if max_dv_rows is None else max_dv_rows
         dv_fallback = False
+        noop = {
+            "version": None,
+            "n_dirs_rewritten": 0,
+            "n_dirs_total": len(head["files"]),
+            "n_deleted": 0,
+        }
         if mode == "dv":
             matched = (
                 self._read_paths(
@@ -3527,48 +3483,27 @@ class SnapshotTable:
                     F.col("__ri").alias("ri"),
                 )
             )
-            d = self._new_dir("dv")
-            matched.write.mode("errorifexists").parquet(d)
-            n_deleted = _dir_num_rows(d)
-            if n_deleted == 0:
-                self._remove_dir(d)
-                return {
-                    "version": None,
-                    "n_dirs_rewritten": 0,
-                    "n_dirs_total": len(head["files"]),
-                    "n_deleted": 0,
-                }
-            if n_deleted > dv_budget:
+            with self._staging() as staged:
+                d = self._stage(staged, spark, "dv", matched, sidecar=True)
+                n_deleted = _dir_num_rows(d)
+                if n_deleted == 0:
+                    return noop
                 # DV size policy (VERDICT r7 #2): a MASS delete in dv
                 # mode would append an unbounded sidecar and tax every
                 # later read with an oversized anti-join — materialize
                 # the touched files once instead (scoped CoW below)
-                self._remove_dir(d)
-                dv_fallback = True
-            else:
-                rec = {
-                    "operation": "delete_where(dv)",
-                    "files": list(head["files"]),
-                    "dvs": list(head.get("dvs") or []) + [d],
-                }
-                if "columns" in head:
-                    rec["columns"] = list(head["columns"])
-                    if "schema_json" in head:
-                        rec["schema_json"] = head["schema_json"]
-                    rec.update(self._dir_meta(head, head["files"]))
-                try:
-                    v = self._append_log(
-                        rec, expected_parent=head["version"]
+                dv_fallback = n_deleted > dv_budget
+                if not dv_fallback:
+                    v = self._publish(
+                        head,
+                        {
+                            "operation": "delete_where(dv)",
+                            "files": list(head["files"]),
+                            "dvs": list(head.get("dvs") or []) + [d],
+                        },
+                        staged,
                     )
-                except ConcurrentWriteError:
-                    self._remove_dir(d)
-                    raise
-                return {
-                    "version": v,
-                    "n_dirs_rewritten": 0,
-                    "n_dirs_total": len(head["files"]),
-                    "n_deleted": int(n_deleted),
-                }
+                    return {**noop, "version": v, "n_deleted": int(n_deleted)}
         hits = (
             self._read_paths(spark, head, head["files"], with_file=True)
             .filter(cond)
@@ -3578,43 +3513,26 @@ class SnapshotTable:
         )
         touched = self._touched_dirs(head, [r["__f"] for r in hits])
         if not touched:
-            return {
-                "version": None,
-                "n_dirs_rewritten": 0,
-                "n_dirs_total": len(head["files"]),
-                "n_deleted": 0,
-            }
+            return noop
         untouched = [d for d in head["files"] if d not in touched]
         kept_rows = self._read_paths(spark, head, touched).filter(
             ~F.coalesce(cond, F.lit(False))
         )
-        d = self._new_dir("delete")
-        kept_rows.write.mode("errorifexists").parquet(d)
-        n_deleted = sum(r["count"] for r in hits)
-        self._write_manifest(spark, d)
-        rec = {
-            "operation": (
-                "delete_where(dv->cow: matched rows > max_dv_rows)"
-                if dv_fallback
-                else "delete_where"
-            ),
-            "files": untouched + [d],
-        }
-        if "columns" in head:
-            rec["columns"] = list(head["columns"])
-            if "schema_json" in head:
-                rec["schema_json"] = head["schema_json"]
-            rec.update(self._dir_meta(head, untouched, d, kept_rows.schema))
-        try:
-            v = self._append_log(rec, expected_parent=head["version"])
-        except ConcurrentWriteError:
-            self._remove_dir(d)
-            raise
+        op = (
+            "delete_where(dv->cow: matched rows > max_dv_rows)"
+            if dv_fallback
+            else "delete_where"
+        )
+        with self._staging() as staged:
+            d = self._stage(staged, spark, "delete", kept_rows)
+            v = self._publish(
+                head, {"operation": op, "files": untouched + [d]}, staged
+            )
         return {
             "version": v,
             "n_dirs_rewritten": len(touched),
-            "n_dirs_total": len(head["files"]) ,
-            "n_deleted": int(n_deleted),
+            "n_dirs_total": len(head["files"]),
+            "n_deleted": int(sum(r["count"] for r in hits)),
         }
 
     def change_feed(
@@ -3636,9 +3554,7 @@ class SnapshotTable:
         from pyspark.sql import functions as F
 
         old = self._rec_at(from_version)
-        new = self._rec_at(
-            self._head_version() if to_version is None else to_version
-        )
+        new = self._head(to_version)
         shared = set(old["files"]) & set(new["files"])
         # Deletion vectors change a directory's EFFECTIVE rows without
         # changing its path, so a dir is only cancelable when no DV
@@ -3823,15 +3739,7 @@ class SnapshotTable:
         if keep_last < 1:
             raise ValueError("vacuum: keep_last must be >= 1")
         grace = self.VACUUM_GRACE_S if grace_s is None else float(grace_s)
-        while not self.protocol.put_if_absent(self._VACUUM_LOCK, b"vacuum"):
-            age = self._vacuum_lock_age()
-            if age is not None and age > self.VACUUM_LOCK_STALE_S:
-                raise StaleCommitMarkerError(
-                    f"snapshot table {self.root}: vacuum lock "
-                    f"{self._VACUUM_LOCK} is {age:.0f}s old — a vacuum "
-                    "crashed; delete the lock file to recover"
-                )
-            time.sleep(0.02)
+        self._acquire_vacuum_lock(b"vacuum")
         try:
             # settle: a committer that passed its lock check just
             # before we acquired publishes within this window, so the

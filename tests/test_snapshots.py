@@ -5,6 +5,9 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
+from dbt_lab_spark.plans import snapshots as _snapshots
 from dbt_lab_spark.plans.snapshots import SnapshotTable
 
 
@@ -636,3 +639,214 @@ def test_footer_schema_bails_on_ntz_timestamp_in_fixed_size_list(tmp_path):
     plain = str(tmp_path / "g.parquet")
     pq.write_table(pa.table({"x": pa.array([1], type=pa.int64())}), plain)
     assert _footer_spark_schema([plain]) is not None
+
+
+# -- fault injection on the commit path ---------------------------------
+# Each mutation is interrupted after its data dir is written (the
+# manifest write raises; for a DV delete, the row count of its sidecar
+# does) and at publish (the `_log/` record's conditional create
+# raises).  Either way the error propagates, the table is unchanged,
+# nothing the mutation staged is left behind, and a retry succeeds.
+
+_ROWS0 = [(k, "a") for k in range(5)]
+_ROWS1 = [(k, "b") for k in range(5, 10)]
+
+
+def _upsert(rows, src):
+    keys = {k for k, _ in src}
+    return sorted([r for r in rows if r[0] not in keys] + src)
+
+
+_SRC = [(1, "m"), (100, "n")]
+_BASE = sorted(_ROWS0 + _ROWS1)
+
+# name -> (mutation, expected head rows after it, writes a data dir)
+_MUTATIONS = {
+    "commit": (lambda t, s: t.commit(_df(s, [(100, "c")])), [(100, "c")], True),
+    "append": (
+        lambda t, s: t.append(_df(s, [(100, "c")])),
+        _BASE + [(100, "c")],
+        True,
+    ),
+    "append_stream_batch": (
+        lambda t, s: t.append_stream_batch(_df(s, [(100, "c")]), batch_id=1),
+        _BASE + [(100, "c")],
+        True,
+    ),
+    "merge_cow": (
+        lambda t, s: t.merge(s, _df(s, _SRC), on=["k"]),
+        _upsert(_BASE, _SRC),
+        True,
+    ),
+    "merge_dv": (
+        lambda t, s: t.merge(s, _df(s, _SRC), on=["k"], mode="dv"),
+        _upsert(_BASE, _SRC),
+        True,
+    ),
+    "merge_dv_fallback": (
+        lambda t, s: t.merge(s, _df(s, _SRC), on=["k"], mode="dv", max_dv_rows=0),
+        _upsert(_BASE, _SRC),
+        True,
+    ),
+    "delete_cow": (
+        lambda t, s: t.delete_where(s, "k < 3"),
+        [r for r in _BASE if r[0] >= 3],
+        True,
+    ),
+    "delete_dv": (
+        lambda t, s: t.delete_where(s, "k < 3", mode="dv"),
+        [r for r in _BASE if r[0] >= 3],
+        True,
+    ),
+    "compact": (lambda t, s: t.compact(s), _BASE, True),
+    "evolve": (lambda t, s: t.evolve(rename={"v": "w"}), _BASE, False),
+    "rollback": (lambda t, s: t.rollback(0), sorted(_ROWS0), False),
+    "add_constraint": (
+        lambda t, s: t.add_constraint(s, "k_pos", "k >= 0"),
+        _BASE,
+        False,
+    ),
+    "drop_constraint": (lambda t, s: t.drop_constraint("k_small"), _BASE, False),
+}
+
+# metadata-only mutations write no dir; the fallback publishes exactly
+# as merge_cow does
+_CASES = [
+    (name, point)
+    for name, (_, _, writes) in _MUTATIONS.items()
+    for point in ("staged", "publish")
+    if (writes or point == "publish")
+    and (name, point) != ("merge_dv_fallback", "publish")
+]
+
+
+class _Fault(RuntimeError):
+    pass
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _assert_no_orphans(t: SnapshotTable) -> None:
+    referenced = set()
+    for rec in t._log():
+        referenced |= set(rec["files"]) | set(rec.get("dvs") or [])
+    entries = os.listdir(t.root)
+    dirs = {
+        os.path.join(t.root, e)
+        for e in entries
+        if e.startswith("v") and os.path.isdir(os.path.join(t.root, e))
+    }
+    assert dirs == referenced, sorted(dirs ^ referenced)
+    for e in entries:
+        if e.startswith("_claim_"):
+            assert os.path.isdir(os.path.join(t.root, e[len("_claim_"):])), e
+    manifests = os.path.join(t.root, "_manifests")
+    for e in os.listdir(manifests) if os.path.isdir(manifests) else []:
+        assert os.path.join(t.root, e[: -len(".parquet")]) in referenced, e
+
+
+@pytest.mark.parametrize("name,point", _CASES)
+def test_interrupted_commit_leaves_table_intact(
+    spark, tmp_path, monkeypatch, name, point
+):
+    mutate, expected, _ = _MUTATIONS[name]
+    t = SnapshotTable(str(tmp_path / "t"), stat_cols=["k"])
+    two_dirs = name in ("compact", "rollback")
+    t.commit(_df(spark, _ROWS0 if two_dirs else _BASE))
+    if two_dirs:
+        t.append(_df(spark, _ROWS1))
+    if name == "drop_constraint":
+        t.add_constraint(spark, "k_small", "k < 1000")
+    versions = t.versions()
+
+    if point == "publish":
+        put = t.protocol.put_if_absent
+
+        def failing_put(key, data):
+            if key.startswith("_log/"):
+                raise _Fault("publish failed")
+            return put(key, data)
+
+        monkeypatch.setattr(t.protocol, "put_if_absent", failing_put)
+    elif name == "delete_dv":
+
+        def failing_count(d):
+            raise _Fault("sidecar count failed")
+
+        monkeypatch.setattr(_snapshots, "_dir_num_rows", failing_count)
+    else:
+
+        def failing_manifest(spark_, d, ann=None):
+            raise _Fault("manifest write failed")
+
+        monkeypatch.setattr(t, "_write_manifest", failing_manifest)
+    with pytest.raises(_Fault):
+        mutate(t, spark)
+    monkeypatch.undo()
+
+    assert t.versions() == versions
+    for v in versions:
+        want = sorted(_ROWS0) if two_dirs and v == 0 else _BASE
+        assert _rows(t.read(spark, version=v)) == want
+    _assert_no_orphans(t)
+    mutate(t, spark)
+    assert _rows(t.read(spark)) == expected
+    _assert_no_orphans(t)
+
+
+def test_stream_batch_replayed_after_failed_publish_commits_once(
+    spark, tmp_path, monkeypatch
+):
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit(_df(spark, _ROWS0))
+    put = t.protocol.put_if_absent
+
+    def failing_put(key, data):
+        if key.startswith("_log/"):
+            raise _Fault("publish failed")
+        return put(key, data)
+
+    monkeypatch.setattr(t.protocol, "put_if_absent", failing_put)
+    with pytest.raises(_Fault):
+        t.append_stream_batch(_df(spark, _ROWS1), batch_id=4)
+    monkeypatch.undo()
+    assert t.append_stream_batch(_df(spark, _ROWS1), batch_id=4) == 1
+    assert t.append_stream_batch(_df(spark, _ROWS1), batch_id=4) is None
+    assert _rows(t.read(spark)) == _BASE
+    _assert_no_orphans(t)
+
+
+def test_checkpoint_failure_after_publish_keeps_the_commit(
+    spark, tmp_path, monkeypatch
+):
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.CHECKPOINT_EVERY = 2
+    t.commit(_df(spark, _ROWS0))
+    t.append(_df(spark, _ROWS1))
+
+    def failing_ckpt(v):
+        raise _Fault("checkpoint failed")
+
+    monkeypatch.setattr(t, "_write_ckpt", failing_ckpt)
+    assert t.append(_df(spark, [(100, "c")])) == 2
+    monkeypatch.undo()
+    assert not t.protocol.exists(t._ckpt_key(2))
+    assert _rows(SnapshotTable(t.root).read(spark)) == _BASE + [(100, "c")]
+    _assert_no_orphans(t)
+
+
+def test_compact_retrain_without_vectors_claims_nothing(spark, tmp_path):
+    """The retrain's no-vectors error is raised before compact reserves
+    its output dir, so it leaves no name claim behind."""
+    t = SnapshotTable(str(tmp_path / "t"))
+    ann = {"centroids": [[0.0, 1.0], [1.0, 0.0]], "col": "vec", "id_col": "vec_id"}
+    t.commit(
+        spark.createDataFrame([], "vec_id long, vec array<float>"),
+        record_extra={"ann": ann},
+    )
+    with pytest.raises(ValueError, match="no vectors"):
+        t.compact(spark, retrain_ann=True)
+    assert not [e for e in os.listdir(t.root) if "compact" in e]
+    _assert_no_orphans(t)

@@ -188,6 +188,38 @@ class TestCommitRebaseRevalidation:
         ]
         assert len(orphans) == 1  # only v0's
 
+    @pytest.mark.parametrize("writer", ["append", "append_stream_batch"])
+    def test_delta_writers_revalidate_after_concurrent_add_constraint(
+        self, spark, tmp_path, writer
+    ):
+        """The same interleaving for the delta writers: the retry after
+        the head moved re-checks the batch, refuses it with the new
+        constraint named, and removes the delta dir it had written."""
+        root = str(tmp_path / "t")
+        t = SnapshotTable(root)
+        t.commit(_kv(spark, 0, 10))
+        bad = spark.createDataFrame([(1, -5)], "k long, v long")
+        orig = t._write_manifest
+        fired = {}
+
+        def hooked(spark_, d, ann=None):
+            if not fired:
+                fired["x"] = SnapshotTable(root).add_constraint(
+                    spark, "v_pos", "v >= 0"
+                )
+            return orig(spark_, d, ann)
+
+        t._write_manifest = hooked
+        with pytest.raises(ValueError, match="v_pos"):
+            if writer == "append":
+                t.append(bad)
+            else:
+                t.append_stream_batch(bad, batch_id=3)
+        t2 = SnapshotTable(root)
+        assert t2.read(spark).count() == 10
+        assert t2._log()[-1]["constraints"] == {"v_pos": "v >= 0"}
+        assert not [e for e in os.listdir(root) if "delta" in e]
+
 
 class TestCompactDvLifecycle:
     def test_full_compact_retires_dv_sidecars(self, spark, tmp_path):

@@ -795,17 +795,35 @@ class SnapshotTable:
             p = p[len("file:"):]
         return os.path.realpath(os.path.abspath(p))
 
+    def _owning_dirs(self, dirs: list[str], files) -> list[str]:
+        """The directories among `dirs` that own any of the data-file
+        paths `files`, both sides compared in their `_canon` spelling."""
+        norm = {self._canon(f) for f in set(files)}
+        out = []
+        for d in dirs:
+            prefix = self._canon(d) + os.sep
+            if any(f.startswith(prefix) for f in norm):
+                out.append(d)
+        return out
+
+    def _dv_files(self, dvs) -> set[str]:
+        """The data files whose rows the DV sidecars `dvs` delete: one
+        driver-side read of each sidecar's `f` column, O(deleted rows).
+        A sidecar that no longer exists targets nothing."""
+        import pyarrow.parquet as _pq
+
+        files: set[str] = set()
+        for dvd in dvs:
+            for p in self._data_files(dvd):
+                files.update(_pq.read_table(p, columns=["f"]).column("f").to_pylist())
+        return files
+
     def _touched_dirs(self, head: dict, touched_files: list[str]) -> list[str]:
         """Map matched data-file paths to the snapshot directories that
         own them.  Raises instead of silently losing writes when files
         matched but none map back (the relative-root / symlink hazard —
         a no-op here would drop merge updates or skip deletes)."""
-        norm = [self._canon(f) for f in touched_files]
-        touched = sorted(
-            d
-            for d in head["files"]
-            if any(f.startswith(self._canon(d) + os.sep) for f in norm)
-        )
+        touched = sorted(self._owning_dirs(head["files"], touched_files))
         if touched_files and not touched:
             raise RuntimeError(
                 f"snapshot table {self.root}: {len(touched_files)} matched "
@@ -3165,27 +3183,12 @@ class SnapshotTable:
         # rewritten dirs — a sidecar whose targets all lived there is
         # DEAD, and inheriting it would tax every later read with the
         # anti-join and pin the DV dir against vacuum forever.  Keep
-        # only sidecars still targeting a carried-over directory (one
-        # driver-side `f`-column read per sidecar, O(deleted rows) —
-        # the same bounded read change_feed does).
-        live_dvs: list[str] = []
-        parent_dvs = [x for x in (head.get("dvs") or []) if os.path.isdir(x)]
-        if parent_dvs and keep:
-            import pyarrow.parquet as _pq
-
-            kept_canon = [self._canon(k) for k in keep]
-            for dvd in parent_dvs:
-                targets: set[str] = set()
-                for p in self._data_files(dvd):
-                    targets.update(
-                        _pq.read_table(p, columns=["f"]).column("f").to_pylist()
-                    )
-                if any(
-                    f.startswith(k + os.sep)
-                    for f in targets
-                    for k in kept_canon
-                ):
-                    live_dvs.append(dvd)
+        # only sidecars still targeting a carried-over directory.
+        live_dvs = [
+            dvd
+            for dvd in head.get("dvs") or []
+            if keep and self._owning_dirs(keep, self._dv_files([dvd]))
+        ]
         meta: dict = {"dvs": live_dvs}
         if retrain_ann:
             meta["ann"] = ann_meta  # the NEW quantizer replaces the old
@@ -3247,7 +3250,10 @@ class SnapshotTable:
     # matched-row count exceeds this auto-materializes via scoped CoW
     # instead of growing the sidecars unboundedly — DVs are for POINT
     # deletes; a mass delete is cheaper rewritten once than anti-joined
-    # on every subsequent read.  Override per call with max_dv_rows=.
+    # on every subsequent read.  The count comes from the mutation's one
+    # detection (merge's probe; delete_where's sidecar footer), and the
+    # CoW fallback reuses the touched dirs that detection found.
+    # Override per call with max_dv_rows=.
     DV_WRITE_MAX_ROWS = 500_000
 
     def merge(
@@ -3268,9 +3274,13 @@ class SnapshotTable:
         data file rewritten) and the ENTIRE source lands as one delta
         directory — updates become DV-delete + re-insert, the Delta
         deletion-vector MERGE mechanics.  A one-row upsert into a
-        10k-directory table costs one detection scan, one O(1) sidecar,
+        10k-directory table costs the probe below, one O(1) sidecar read
+        from the touched directories only (none when nothing matched),
         and one O(source) delta write; `compact()` later folds the
-        tombstones away.  Returns n_dirs_rewritten = 0.
+        tombstones away.  Returns n_dirs_rewritten = 0.  The probe also
+        counts the matched rows, so a DV merge over `max_dv_rows`
+        decides before writing anything and goes straight to the CoW
+        write below.
 
         CoW mechanics, the part that matters at 100 TB: only snapshot
         directories that actually CONTAIN matching keys are rewritten.
@@ -3282,8 +3292,8 @@ class SnapshotTable:
         unique keys, updates ∪ inserts IS the source, null keys
         included — and every untouched directory is carried into the
         new version by reference: an update touching 1 of 10k
-        directories rewrites 1.  `mode="dv"` checks key uniqueness
-        with its own aggregate.  Source columns must match the table's
+        directories rewrites 1.  Both modes run this one probe.
+        Source columns must match the table's
         (checked driver-side, before any job).  History is preserved
         until `vacuum`.
 
@@ -3332,49 +3342,6 @@ class SnapshotTable:
             raise ValueError(f"merge: unknown mode {mode!r}")
         self._validate(source, head.get("constraints"))
         dv_budget = self.DV_WRITE_MAX_ROWS if max_dv_rows is None else max_dv_rows
-        dv_fallback = False
-        if mode == "dv":
-            if source.groupBy(*on).count().filter(F.col("count") > 1).limit(1).count():
-                raise ValueError(dup_err)
-            keys = source.select(*on)
-            matched = (
-                self._read_paths(
-                    spark, head, head["files"], with_file=True, with_pos=True
-                )
-                .select("__f", "__ri", *on)
-                .join(keys, on, "left_semi")
-                .select(
-                    self._norm_file_col(F.col("__f")).alias("f"),
-                    F.col("__ri").alias("ri"),
-                )
-            )
-            with self._staging() as staged:
-                dv_dir = self._stage(staged, spark, "dv", matched, sidecar=True)
-                n_updated = _dir_num_rows(dv_dir)
-                # DV size policy (VERDICT r7 #2): a mass update is
-                # cheaper materialized once (scoped CoW below) than
-                # tombstoned and anti-joined on every later read; a pure
-                # insert records no (empty) sidecar
-                dv_fallback = n_updated > dv_budget
-                if not dv_fallback:
-                    d = self._stage(staged, spark, "delta", source)
-                    v = self._publish(
-                        head,
-                        {
-                            "operation": f"merge(on={on}, mode=dv)",
-                            "files": head["files"] + [d],
-                            "dvs": list(head.get("dvs") or [])
-                            + ([dv_dir] if n_updated else []),
-                            **(record_extra or {}),
-                        },
-                        staged,
-                    )
-                    return {
-                        "version": v,
-                        "n_dirs_rewritten": 0,
-                        "n_dirs_total": len(head["files"]),
-                        "n_updated": int(n_updated),
-                    }
         probe = (
             source.groupBy(*on)
             .agg(F.count(F.lit(1)).alias("__n"))
@@ -3385,14 +3352,50 @@ class SnapshotTable:
                 "left_outer",
             )
             .groupBy("__f")
-            .agg(F.max("__n").alias("__n"))
+            .agg(F.max("__n").alias("__n"), F.count(F.lit(1)).alias("__m"))
             .collect()
         )
         if any(r["__n"] > 1 for r in probe):
             raise ValueError(dup_err)
-        touched = self._touched_dirs(
-            head, [r["__f"] for r in probe if r["__f"] is not None]
-        )
+        hits = [r for r in probe if r["__f"] is not None]
+        touched = self._touched_dirs(head, [r["__f"] for r in hits])
+        n_updated = sum(r["__m"] for r in hits)
+        if mode == "dv" and n_updated <= dv_budget:
+            dvs = list(head.get("dvs") or [])
+            with self._staging() as staged:
+                if n_updated:
+                    matched = (
+                        self._read_paths(
+                            spark, head, touched, with_file=True, with_pos=True
+                        )
+                        .select("__f", "__ri", *on)
+                        .join(source.select(*on), on, "left_semi")
+                        .select(
+                            self._norm_file_col(F.col("__f")).alias("f"),
+                            F.col("__ri").alias("ri"),
+                        )
+                    )
+                    dvs.append(self._stage(staged, spark, "dv", matched, sidecar=True))
+                d = self._stage(staged, spark, "delta", source)
+                v = self._publish(
+                    head,
+                    {
+                        "operation": f"merge(on={on}, mode=dv)",
+                        "files": head["files"] + [d],
+                        "dvs": dvs,
+                        **(record_extra or {}),
+                    },
+                    staged,
+                )
+            return {
+                "version": v,
+                "n_dirs_rewritten": 0,
+                "n_dirs_total": len(head["files"]),
+                "n_updated": int(n_updated),
+            }
+        # cow mode, or a DV merge over its budget: a mass update is
+        # cheaper materialized once than tombstoned and anti-joined on
+        # every later read
         untouched = [d for d in head["files"] if d not in touched]
         new_rows = (
             self._read_paths(spark, head, touched)
@@ -3403,7 +3406,7 @@ class SnapshotTable:
         )
         op = (
             f"merge(on={on}, mode=dv->cow: matched rows > max_dv_rows)"
-            if dv_fallback
+            if mode == "dv"
             else f"merge(on={on})"
         )
         with self._staging() as staged:
@@ -3453,11 +3456,14 @@ class SnapshotTable:
         metadata-projected scan plus an O(1) sidecar write, instead of
         rewriting every touched file.  Time travel is exact: each
         version's record carries its own `dvs` list, so pre-delete
-        versions read the rows back.
+        versions read the rows back.  The staged sidecar is dv mode's
+        only detection: its footer row count is checked against
+        `max_dv_rows`, and over budget its `f` column names the touched
+        directories for the cow rewrite, so no second scan runs.
 
         Returns {"version" (None if no-op), "n_dirs_rewritten",
         "n_dirs_total", "n_deleted"} — `n_dirs_rewritten` is 0 in dv
-        mode by construction."""
+        mode unless it fell back to cow."""
         from pyspark.sql import functions as F
 
         head = self._head()
@@ -3465,7 +3471,6 @@ class SnapshotTable:
         if mode not in ("cow", "dv"):
             raise ValueError(f"delete_where: unknown mode {mode!r}")
         dv_budget = self.DV_WRITE_MAX_ROWS if max_dv_rows is None else max_dv_rows
-        dv_fallback = False
         noop = {
             "version": None,
             "n_dirs_rewritten": 0,
@@ -3488,12 +3493,7 @@ class SnapshotTable:
                 n_deleted = _dir_num_rows(d)
                 if n_deleted == 0:
                     return noop
-                # DV size policy (VERDICT r7 #2): a MASS delete in dv
-                # mode would append an unbounded sidecar and tax every
-                # later read with an oversized anti-join — materialize
-                # the touched files once instead (scoped CoW below)
-                dv_fallback = n_deleted > dv_budget
-                if not dv_fallback:
+                if n_deleted <= dv_budget:
                     v = self._publish(
                         head,
                         {
@@ -3504,23 +3504,28 @@ class SnapshotTable:
                         staged,
                     )
                     return {**noop, "version": v, "n_deleted": int(n_deleted)}
-        hits = (
-            self._read_paths(spark, head, head["files"], with_file=True)
-            .filter(cond)
-            .groupBy("__f")
-            .count()
-            .collect()
-        )
-        touched = self._touched_dirs(head, [r["__f"] for r in hits])
-        if not touched:
-            return noop
+                # over budget: the sidecar was the probe — it names the
+                # touched files, and leaving the scope removes it
+                touched = self._touched_dirs(head, self._dv_files([d]))
+        else:
+            hits = (
+                self._read_paths(spark, head, head["files"], with_file=True)
+                .filter(cond)
+                .groupBy("__f")
+                .count()
+                .collect()
+            )
+            touched = self._touched_dirs(head, [r["__f"] for r in hits])
+            if not touched:
+                return noop
+            n_deleted = sum(r["count"] for r in hits)
         untouched = [d for d in head["files"] if d not in touched]
         kept_rows = self._read_paths(spark, head, touched).filter(
             ~F.coalesce(cond, F.lit(False))
         )
         op = (
             "delete_where(dv->cow: matched rows > max_dv_rows)"
-            if dv_fallback
+            if mode == "dv"
             else "delete_where"
         )
         with self._staging() as staged:
@@ -3532,7 +3537,7 @@ class SnapshotTable:
             "version": v,
             "n_dirs_rewritten": len(touched),
             "n_dirs_total": len(head["files"]),
-            "n_deleted": int(sum(r["count"] for r in hits)),
+            "n_deleted": int(n_deleted),
         }
 
     def change_feed(
@@ -3559,27 +3564,9 @@ class SnapshotTable:
         # Deletion vectors change a directory's EFFECTIVE rows without
         # changing its path, so a dir is only cancelable when no DV
         # sidecar that differs between the two versions touches it.
-        # DV dirs are immutable and small: reading just their `f`
-        # column driver-side stays O(deleted rows).
         diff_dvs = set(old.get("dvs") or []) ^ set(new.get("dvs") or [])
         if diff_dvs and shared:
-            import pyarrow.parquet as _pq
-
-            affected: set[str] = set()
-            for dvd in diff_dvs:
-                if not os.path.isdir(dvd):
-                    continue
-                for fn in os.listdir(dvd):
-                    if fn.endswith(".parquet"):
-                        t = _pq.read_table(
-                            os.path.join(dvd, fn), columns=["f"]
-                        )
-                        affected.update(t.column("f").to_pylist())
-            shared -= {
-                d
-                for d in shared
-                if any(f.startswith(self._canon(d) + os.sep) for f in affected)
-            }
+            shared -= set(self._owning_dirs(list(shared), self._dv_files(diff_dvs)))
         old_only = [d for d in old["files"] if d not in shared]
         new_only = [d for d in new["files"] if d not in shared]
 
@@ -3761,6 +3748,25 @@ class SnapshotTable:
             referenced = {d for r in kept_recs for d in r["files"]} | {
                 d for r in kept_recs for d in (r.get("dvs") or [])
             }
+            # truncate history first: record files and checkpoints
+            # below the oldest kept version (its own checkpoint is the
+            # new base), newest first, and only then reclaim their
+            # directories — a vacuum interrupted at any delete leaves
+            # every listed version readable (an unbroken prefix of the
+            # old history plus the kept versions) and orphans the next
+            # vacuum sweeps
+            doomed = []
+            for key in self.protocol.list("_log"):
+                name = key.rsplit("/", 1)[-1]
+                v = None
+                if name.endswith(".json") and name[:-5].isdigit():
+                    v = int(name[:-5])
+                elif name.startswith("_ckpt_") and name.endswith(".json"):
+                    v = int(name[len("_ckpt_"):-5])
+                if v is not None and v < kept[0]:
+                    doomed.append((v, key))
+            for _, key in sorted(doomed, reverse=True):
+                self.protocol.delete(key)
             now = time.time()
             removed = []
             for entry in sorted(os.listdir(self.root)):
@@ -3788,17 +3794,6 @@ class SnapshotTable:
                 except OSError:
                     pass
                 removed.append(p)
-            # truncate history: record files and checkpoints below the
-            # oldest kept version (its own checkpoint is the new base)
-            for key in self.protocol.list("_log"):
-                name = key.rsplit("/", 1)[-1]
-                v = None
-                if name.endswith(".json") and name[:-5].isdigit():
-                    v = int(name[:-5])
-                elif name.startswith("_ckpt_") and name.endswith(".json"):
-                    v = int(name[len("_ckpt_"):-5])
-                if v is not None and v < kept[0]:
-                    self.protocol.delete(key)
             # tidy directory name claims whose directory is gone
             # (names never recur — versions count up monotonically).
             # The same grace window as data dirs applies (r9 review): a

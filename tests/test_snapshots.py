@@ -599,24 +599,63 @@ def test_merge_column_error_precedes_duplicate_check(spark, tmp_path):
             t.merge(spark, bad, on=["k"], mode=mode)
 
 
-def test_merge_cow_job_count(spark, tmp_path):
-    """A CoW merge runs one probe action plus the write: on this small
-    table it starts 8 Spark jobs, where a separate duplicate-key
-    aggregate, a touched-file collect and a write that scanned every
-    target key twice started 14."""
-    t = SnapshotTable(str(tmp_path / "t"))
-    t.commit(_df(spark, [(1, "a"), (2, "b")]))
-    t.append(_df(spark, [(10, "c"), (11, "d")]))
-    src = _df(spark, [(10, "C"), (99, "n")])
+# (mutation, mode) -> its call on the shared 2-dir table
+_JOB_CALLS = {
+    "merge": lambda t, s, **kw: t.merge(
+        s, _df(s, [(10, "C"), (99, "n")]), on=["k"], **kw
+    ),
+    "delete_where": lambda t, s, **kw: t.delete_where(s, "k = 10", **kw),
+}
+_JOB_MODES = {
+    "cow": {"mode": "cow"},
+    "dv": {"mode": "dv"},
+    "dv_fallback": {"mode": "dv", "max_dv_rows": 0},
+}
+# ceilings for the cow and within-budget dv calls: a CoW merge is one
+# probe action plus the write; a dv merge adds the sidecar write; a dv
+# delete is its sidecar write alone
+_JOB_CEILINGS = {
+    ("merge", "cow"): 8,
+    ("merge", "dv"): 9,
+    ("delete_where", "cow"): 3,
+    ("delete_where", "dv"): 1,
+}
+
+
+def _count_jobs(spark, t, name, mode):
     sc = spark.sparkContext
-    group = "test_merge_cow_job_count"
-    sc.setJobGroup(group, "cow merge")
+    group = f"test_mutation_job_count:{name}:{mode}:{t.root}"
+    sc.setJobGroup(group, f"{name} {mode}")
     try:
-        t.merge(spark, src, on=["k"], mode="cow")
+        _JOB_CALLS[name](t, spark, **_JOB_MODES[mode])
     finally:
         sc._jsc.clearJobGroup()
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= 8, n_jobs
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("mode", list(_JOB_MODES))
+@pytest.mark.parametrize("name", list(_JOB_CALLS))
+def test_mutation_job_count(spark, tmp_path, name, mode):
+    """Spark jobs one merge/delete_where starts on a 2-dir table.  Each
+    decides DV or copy-on-write from one detection, so a dv call over
+    its `max_dv_rows` budget starts no more jobs than the same call in
+    cow mode (it used to stage a sidecar, discard it and then run the
+    whole CoW path: 15 jobs for the merge, 4 for the delete)."""
+
+    def table(sub):
+        t = SnapshotTable(str(tmp_path / sub))
+        t.commit(_df(spark, [(1, "a"), (2, "b")]))
+        t.append(_df(spark, [(10, "c"), (11, "d")]))
+        return t
+
+    t = table(mode)
+    n_jobs = _count_jobs(spark, t, name, mode)
+    if mode == "dv_fallback":
+        assert "dv->cow" in t._head()["operation"]
+        n_cow = _count_jobs(spark, table("cow"), name, "cow")
+        assert 0 < n_jobs <= n_cow, (n_jobs, n_cow)
+    else:
+        assert 0 < n_jobs <= _JOB_CEILINGS[name, mode], n_jobs
 
 
 def test_footer_schema_bails_on_ntz_timestamp_in_fixed_size_list(tmp_path):
@@ -849,4 +888,80 @@ def test_compact_retrain_without_vectors_claims_nothing(spark, tmp_path):
     with pytest.raises(ValueError, match="no vectors"):
         t.compact(spark, retrain_ann=True)
     assert not [e for e in os.listdir(t.root) if "compact" in e]
+    _assert_no_orphans(t)
+
+
+# -- fault injection inside vacuum ---------------------------------------
+# A vacuum interrupted while it deletes (a directory's rmtree, or a
+# `_log/` record's delete) propagates the error, releases its lock,
+# leaves every listed version readable with the rows it had, and a
+# second vacuum finishes the sweep.
+
+
+def _vacuum_fixture(spark, tmp_path):
+    """Five versions whose last two reference neither of the first two
+    directories: v0 commit, v1 append, v2/v3 merges rewriting them, v4
+    append."""
+    t = SnapshotTable(str(tmp_path / "t"), stat_cols=["k"])
+    t.commit(_df(spark, _ROWS0))
+    t.append(_df(spark, _ROWS1))
+    t.merge(spark, _df(spark, [(1, "m")]), on=["k"])
+    t.merge(spark, _df(spark, [(6, "m")]), on=["k"])
+    t.append(_df(spark, [(100, "c")]))
+    return t
+
+
+def _fail_second_rmtree(monkeypatch, t):
+    import shutil
+
+    rmtree, calls = shutil.rmtree, []
+
+    def failing_rmtree(p, *a, **kw):
+        calls.append(p)
+        if len(calls) == 2:
+            os.unlink(SnapshotTable._data_files(p)[0])
+            raise _Fault("rmtree failed part-way")
+        return rmtree(p, *a, **kw)
+
+    monkeypatch.setattr(shutil, "rmtree", failing_rmtree)
+
+
+def _fail_second_log_delete(monkeypatch, t):
+    delete, calls = t.protocol.delete, []
+
+    def failing_delete(key):
+        if key.startswith("_log/"):
+            calls.append(key)
+            if len(calls) == 2:
+                raise _Fault("record delete failed")
+        return delete(key)
+
+    monkeypatch.setattr(t.protocol, "delete", failing_delete)
+
+
+@pytest.mark.parametrize(
+    "inject", [_fail_second_rmtree, _fail_second_log_delete], ids=["rmtree", "log"]
+)
+def test_interrupted_vacuum_recovers(spark, tmp_path, monkeypatch, inject):
+    t = _vacuum_fixture(spark, tmp_path)
+    before = {v: _rows(t.read(spark, version=v)) for v in t.versions()}
+    inject(monkeypatch, t)
+    with pytest.raises(_Fault):
+        t.vacuum(keep_last=2, grace_s=0.0)
+    monkeypatch.undo()
+
+    assert not t.protocol.exists(t._VACUUM_LOCK)
+    assert {3, 4} <= set(t.versions())
+    for v in t.versions():
+        assert _rows(t.read(spark, version=v)) == before[v], v
+    # a stale-lock threshold of zero turns any leftover lock into an
+    # immediate error instead of a wait
+    t.VACUUM_LOCK_STALE_S = 0.0
+    assert t.append(_df(spark, [(200, "d")])) == 5
+
+    t.vacuum(keep_last=3, grace_s=0.0)
+    assert t.versions() == [3, 4, 5]
+    for v in (3, 4):
+        assert _rows(t.read(spark, version=v)) == before[v]
+    assert _rows(t.read(spark)) == before[4] + [(200, "d")]
     _assert_no_orphans(t)

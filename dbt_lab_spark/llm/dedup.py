@@ -302,6 +302,29 @@ def _hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def _hash_bands(
+    df: DataFrame, id_col: str, hash_col: str, n_bands: int, out_id: str, out_hash: str
+) -> DataFrame:
+    """(out_id, out_hash, band, key): one row per disjoint band of
+    64 // n_bands bits of the 64-bit `hash_col` — the pigeonhole index
+    `hamming_join` and `hamming_topk` equi-join on (band, key)."""
+    width = 64 // n_bands
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.col(hash_col).alias(out_hash),
+        F.posexplode(
+            F.array(
+                *[
+                    F.shiftright(F.col(hash_col), b * width).bitwiseAND(
+                        F.lit((1 << width) - 1).cast("long")
+                    )
+                    for b in range(n_bands)
+                ]
+            )
+        ).alias("band", "key"),
+    )
+
+
 def simhash_dedup_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -437,26 +460,8 @@ def hamming_join(
     re-deduping the corpus — per-batch cost is O(batch-vs-bucket), not
     O(corpus^2)."""
     n_bands = max_hamming + 1
-    width = 64 // n_bands
-
-    def _bands(df: DataFrame, out_id: str, out_hash: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.col(hash_col).alias(out_hash),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright(F.col(hash_col), b * width).bitwiseAND(
-                            F.lit((1 << width) - 1).cast("long")
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("band", "key"),
-        )
-
-    lb = _bands(left, "id_l", "h_l")
-    rb = _bands(right, "id_r", "h_r")
+    lb = _hash_bands(left, id_col, hash_col, n_bands, "id_l", "h_l")
+    rb = _hash_bands(right, id_col, hash_col, n_bands, "id_r", "h_r")
     return (
         lb.join(rb, on=["band", "key"])
         .select(
@@ -588,26 +593,8 @@ def hamming_topk(
     from pyspark.sql.window import Window
 
     n_bands = radius + 1
-    width = 64 // n_bands
-
-    def _bands(df: DataFrame, out_id: str, out_hash: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.col(hash_col).alias(out_hash),
-            F.posexplode(
-                F.array(
-                    *[
-                        F.shiftright(F.col(hash_col), b * width).bitwiseAND(
-                            F.lit((1 << width) - 1).cast("long")
-                        )
-                        for b in range(n_bands)
-                    ]
-                )
-            ).alias("band", "key"),
-        )
-
-    qb = _bands(queries, "query_id", "h_q")
-    cb = _bands(corpus, "neighbor_id", "h_c")
+    qb = _hash_bands(queries, id_col, hash_col, n_bands, "query_id", "h_q")
+    cb = _hash_bands(corpus, id_col, hash_col, n_bands, "neighbor_id", "h_c")
     cand = (
         qb.join(cb, on=["band", "key"])
         .select(

@@ -1560,21 +1560,15 @@ CORE_QUERIES: list[QueryDef] = [
 
 def all_queries() -> list[QueryDef]:
     """Full declared workload: core + TPC-H extras + events + text/dedup
-    + vectors."""
+    + vectors, then the stats, time-series, media, lake and streaming
+    families."""
     from dbt_lab_spark.workload_beyond import BEYOND_QUERIES
     from dbt_lab_spark.workload_extras import EXTRA_QUERIES
-    from dbt_lab_spark.workload_r3s5 import SESSION5_QUERIES
-    from dbt_lab_spark.workload_r3s6 import SESSION6_QUERIES
-    from dbt_lab_spark.workload_r3s7 import SESSION7_QUERIES
-    from dbt_lab_spark.workload_r3s8 import SESSION8_QUERIES
-    from dbt_lab_spark.workload_r3s9 import SESSION9_QUERIES
-    from dbt_lab_spark.workload_r4 import R4_QUERIES
-    from dbt_lab_spark.workload_r5 import R5_QUERIES
-    from dbt_lab_spark.workload_r6 import R6_QUERIES
-    from dbt_lab_spark.workload_r7 import R7_QUERIES
-    from dbt_lab_spark.workload_r8 import R8_QUERIES
-    from dbt_lab_spark.workload_r9 import R9_QUERIES
-    from dbt_lab_spark.workload_r10 import R10_QUERIES
+    from dbt_lab_spark.workload_lake import LAKE_QUERIES
+    from dbt_lab_spark.workload_media import MEDIA_QUERIES
+    from dbt_lab_spark.workload_stats import STATS_QUERIES
+    from dbt_lab_spark.workload_streaming import STREAMING_QUERIES
+    from dbt_lab_spark.workload_timeseries import TIMESERIES_QUERIES
     from dbt_lab_spark.workload_tpch import TPCH_EXTRA_QUERIES
 
     out = (
@@ -1582,18 +1576,11 @@ def all_queries() -> list[QueryDef]:
         + TPCH_EXTRA_QUERIES
         + BEYOND_QUERIES
         + EXTRA_QUERIES
-        + SESSION5_QUERIES
-        + SESSION6_QUERIES
-        + SESSION7_QUERIES
-        + SESSION8_QUERIES
-        + SESSION9_QUERIES
-        + R4_QUERIES
-        + R5_QUERIES
-        + R6_QUERIES
-        + R7_QUERIES
-        + R8_QUERIES
-        + R9_QUERIES
-        + R10_QUERIES
+        + STATS_QUERIES
+        + TIMESERIES_QUERIES
+        + MEDIA_QUERIES
+        + LAKE_QUERIES
+        + STREAMING_QUERIES
     )
     # Duplicate names silently shadow in the queries()/oracle_sql()
     # dicts (the r5 q_merge_upsert collision made a declared query

@@ -2174,6 +2174,28 @@ def _lit_coef(t: int, j: int):
     return lambda i: ((F.lit(off) + i * 73) % 21 - 10).cast("double") / 10.0
 
 
+def _lit_bucket(v: F.Column, t: int) -> F.Column:
+    """Table `t`'s LSH bucket of the vector column `v`: its
+    _LIT_PLANES sign bits against the `_lit_coef` hyperplanes, as a
+    '0'/'1' string."""
+
+    def plane_dot(j: int) -> F.Column:
+        c = _lit_coef(t, j)
+        return F.aggregate(
+            F.zip_with(v, F.sequence(F.lit(0), F.size(v) - 1), lambda x, i: x * c(i)),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    return F.concat_ws(
+        "",
+        *[
+            F.when(plane_dot(j) >= 0, F.lit("1")).otherwise(F.lit("0"))
+            for j in range(_LIT_PLANES)
+        ],
+    )
+
+
 def _q_embedding_neardup_lit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH near-dup pairs with LITERAL-formula planes: the
     same bucket-join + exact-cosine-verify shape as
@@ -2188,27 +2210,10 @@ def _q_embedding_neardup_lit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scan(spark, cat, "embeddings", ["vec_id", "embedding"])
     v = to_double_array("embedding")
 
-    def plane_dot(t: int, j: int) -> F.Column:
-        c = _lit_coef(t, j)
-        return F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(0), F.size(v) - 1), lambda x, i: x * c(i)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def bucket(t: int) -> F.Column:
-        return F.concat_ws(
-            "",
-            *[
-                F.when(plane_dot(t, j) >= 0, F.lit("1")).otherwise(F.lit("0"))
-                for j in range(_LIT_PLANES)
-            ],
-        )
-
     bucketed = emb.select(
         F.col("vec_id"),
         v.alias("__v"),
-        F.posexplode(F.array(*[bucket(t) for t in range(_LIT_TABLES)])).alias(
+        F.posexplode(F.array(*[_lit_bucket(v, t) for t in range(_LIT_TABLES)])).alias(
             "__table", "__bucket"
         ),
     )
@@ -2244,28 +2249,11 @@ def _q_knn_lit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = scan(spark, cat, "embeddings", ["vec_id", "embedding"])
     v = to_double_array("embedding")
 
-    def plane_dot(t: int, j: int) -> F.Column:
-        c = _lit_coef(t, j)
-        return F.aggregate(
-            F.zip_with(v, F.sequence(F.lit(0), F.size(v) - 1), lambda x, i: x * c(i)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def bucket(t: int) -> F.Column:
-        return F.concat_ws(
-            "",
-            *[
-                F.when(plane_dot(t, j) >= 0, F.lit("1")).otherwise(F.lit("0"))
-                for j in range(_LIT_PLANES)
-            ],
-        )
-
     def with_buckets(df: DataFrame, idc: str, out_id: str, vout: str) -> DataFrame:
         return df.select(
             F.col(idc).alias(out_id),
             v.alias(vout),
-            F.posexplode(F.array(*[bucket(t) for t in range(_LIT_TABLES)])).alias(
+            F.posexplode(F.array(*[_lit_bucket(v, t) for t in range(_LIT_TABLES)])).alias(
                 "__table", "__bucket"
             ),
         )

@@ -15,11 +15,19 @@ both before calling a round done:
 
 Last full result (r1): 116/116 OK at sf0.001, sf0.01, and sf0.1.
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
+# sys.path reaches only this driver; the Python workers that run the
+# UDF queries import dbt_lab_spark too, and inherit PYTHONPATH from the
+# JVM, which the session below starts with this process's environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 from pyspark.sql import SparkSession
 

@@ -26,6 +26,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
+# sys.path reaches only this driver; the Python workers that run the
+# UDF queries import dbt_lab_spark too, and inherit PYTHONPATH from the
+# JVM, which the session below starts with this process's environment
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 
 
 def main() -> None:

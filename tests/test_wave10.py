@@ -14,13 +14,12 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s6 import (
-    _q_event_study,
+from dbt_lab_spark.workload_stats import (
     _q_hte_segments,
     _q_permutation_test,
-    _q_seasonal_strength,
     _q_tost,
 )
+from dbt_lab_spark.workload_timeseries import _q_event_study, _q_seasonal_strength
 
 
 def _duck(sf_dir: str, sql: str):

@@ -12,7 +12,7 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s7 import (
+from dbt_lab_spark.workload_stats import (
     _q_gbm_round,
     _q_mde_power,
     _q_winsorized_stats,

@@ -13,11 +13,8 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s7 import (
-    _q_hurst,
-    _q_markov_attribution,
-    _q_median_polish,
-)
+from dbt_lab_spark.workload_stats import _q_median_polish
+from dbt_lab_spark.workload_timeseries import _q_hurst, _q_markov_attribution
 
 
 def _duck(sf_dir: str, sql: str):

@@ -12,12 +12,12 @@ from collections import defaultdict
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s7 import (
-    _q_funnel_time,
+from dbt_lab_spark.workload_stats import (
     _q_hill_tail,
     _q_kendall_tau,
     _q_wasserstein,
 )
+from dbt_lab_spark.workload_timeseries import _q_funnel_time
 
 
 def _duck(sf_dir: str, sql: str):

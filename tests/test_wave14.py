@@ -13,7 +13,7 @@ from collections import Counter, defaultdict
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s7 import (
+from dbt_lab_spark.workload_stats import (
     _q_cronbach,
     _q_dispersion,
     _q_skew_audit,

@@ -11,7 +11,7 @@ from collections import defaultdict
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s7 import (
+from dbt_lab_spark.workload_stats import (
     _q_cmh_test,
     _q_evt_gumbel,
     _q_mmd,

@@ -13,13 +13,12 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s8 import (
-    _q_dau_wau,
+from dbt_lab_spark.workload_stats import (
     _q_eb_shrinkage,
-    _q_granger,
     _q_price_index,
     _q_var_es,
 )
+from dbt_lab_spark.workload_timeseries import _q_dau_wau, _q_granger
 
 
 def _duck(sf_dir: str, sql: str):

@@ -14,7 +14,7 @@ import duckdb
 import numpy as np
 
 from dbt_lab_spark.workload_extras import _trade_edges_topk
-from dbt_lab_spark.workload_r3s8 import (
+from dbt_lab_spark.workload_stats import (
     _q_dbscan_core,
     _q_graph_stats,
     _q_higher_moments,

@@ -12,7 +12,7 @@ from collections import defaultdict
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s8 import (
+from dbt_lab_spark.workload_stats import (
     _q_ecod_outliers,
     _q_ratio_delta,
     _q_shapley_r2,

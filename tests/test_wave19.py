@@ -12,11 +12,8 @@ from decimal import ROUND_HALF_UP, Decimal
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s8 import (
-    _q_burrows_delta,
-    _q_partial_corr,
-    _q_rolling_beta,
-)
+from dbt_lab_spark.workload_stats import _q_burrows_delta, _q_partial_corr
+from dbt_lab_spark.workload_timeseries import _q_rolling_beta
 
 
 def _duck(sf_dir: str, sql: str):

@@ -12,12 +12,8 @@ from decimal import ROUND_HALF_UP, Decimal
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s9 import (
-    _q_breusch_pagan,
-    _q_changepoint2,
-    _q_cooks_distance,
-    _q_durbin_watson,
-)
+from dbt_lab_spark.workload_stats import _q_breusch_pagan, _q_cooks_distance
+from dbt_lab_spark.workload_timeseries import _q_changepoint2, _q_durbin_watson
 
 
 def _duck(sf_dir: str, sql: str):

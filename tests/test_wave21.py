@@ -11,11 +11,8 @@ from collections import defaultdict
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s9 import (
-    _q_jarque_bera,
-    _q_spc_chart,
-    _q_theil_index,
-)
+from dbt_lab_spark.workload_stats import _q_jarque_bera, _q_theil_index
+from dbt_lab_spark.workload_timeseries import _q_spc_chart
 
 
 def _duck(sf_dir: str, sql: str):

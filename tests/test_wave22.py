@@ -12,7 +12,7 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s9 import (
+from dbt_lab_spark.workload_stats import (
     _q_gains_chart,
     _q_kruskal_wallis,
     _q_mcnemar,

@@ -34,7 +34,7 @@ def _pyround6(x: float) -> float:
 
 
 def test_ohlc_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_ohlc
+    from dbt_lab_spark.workload_timeseries import _q_ohlc
 
     rows = scan(spark, Catalog(sf_small), "events").collect()
     buckets: dict = defaultdict(list)
@@ -56,7 +56,7 @@ def test_ohlc_matches_bruteforce(spark, sf_small):
 
 
 def test_bollinger_bands_match_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_bollinger
+    from dbt_lab_spark.workload_timeseries import _q_bollinger
 
     rows = scan(spark, Catalog(sf_small), "events").collect()
     daily: dict = defaultdict(int)
@@ -82,7 +82,7 @@ def test_bollinger_bands_match_bruteforce(spark, sf_small):
 
 
 def test_mrr_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _MRR_MIN_ORDERS, _q_mrr
+    from dbt_lab_spark.workload_stats import _MRR_MIN_ORDERS, _q_mrr
 
     cust = scan(spark, Catalog(sf_small), "customer").collect()
     orders = scan(spark, Catalog(sf_small), "orders", ["o_custkey"]).collect()
@@ -116,7 +116,7 @@ def test_mrr_matches_bruteforce(spark, sf_small):
 
 def test_adamic_adar_matches_bruteforce(spark, sf_small):
     from dbt_lab_spark.workload_extras import _trade_edges_topk
-    from dbt_lab_spark.workload_r4 import _q_adamic_adar
+    from dbt_lab_spark.workload_stats import _q_adamic_adar
 
     edges = _trade_edges_topk(spark, sf_small).collect()
     und = {tuple(sorted((r["src"], r["dst"]))) for r in edges}
@@ -147,7 +147,7 @@ def test_adamic_adar_matches_bruteforce(spark, sf_small):
 
 
 def test_js_divergence_is_symmetric_bounded_and_exact(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_js_divergence
+    from dbt_lab_spark.workload_stats import _q_js_divergence
 
     docs = scan(spark, Catalog(sf_small), "documents", ["source", "text"]).collect()
     cnt: dict = defaultdict(Counter)
@@ -176,7 +176,7 @@ def test_js_divergence_is_symmetric_bounded_and_exact(spark, sf_small):
 
 
 def test_ljung_box_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _LB_LAGS, _q_ljung_box
+    from dbt_lab_spark.workload_timeseries import _LB_LAGS, _q_ljung_box
 
     rows = scan(spark, Catalog(sf_small), "events", ["ts"]).collect()
     hourly = Counter(int(r["ts"].timestamp() * 1000) // 3600000 for r in rows)

@@ -36,7 +36,7 @@ def _daily_purchases(spark, sf) -> dict[int, int]:
 
 
 def test_friedman_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_friedman
+    from dbt_lab_spark.workload_stats import _q_friedman
 
     cust = {
         r["c_custkey"]: r["c_nationkey"]
@@ -66,7 +66,7 @@ def test_friedman_matches_bruteforce(spark, sf_small):
 
 
 def test_levene_bf_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_levene_bf
+    from dbt_lab_spark.workload_stats import _q_levene_bf
 
     groups: dict = defaultdict(list)
     for r in scan(spark, Catalog(sf_small), "events").collect():
@@ -89,7 +89,7 @@ def test_levene_bf_matches_bruteforce(spark, sf_small):
 
 
 def test_grubbs_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_grubbs
+    from dbt_lab_spark.workload_stats import _q_grubbs
 
     daily = _daily_purchases(spark, sf_small)
     n = float(len(daily))
@@ -107,7 +107,7 @@ def test_grubbs_matches_bruteforce(spark, sf_small):
 
 
 def test_chow_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_chow_test
+    from dbt_lab_spark.workload_timeseries import _q_chow_test
 
     daily = _daily_purchases(spark, sf_small)
     days = sorted(daily)
@@ -146,7 +146,7 @@ def test_chow_matches_bruteforce(spark, sf_small):
 def test_vif_matches_numpy(spark, sf_small):
     import numpy as np
 
-    from dbt_lab_spark.workload_r4 import _q_vif
+    from dbt_lab_spark.workload_stats import _q_vif
 
     cust = scan(spark, Catalog(sf_small), "customer").collect()
     per: dict = defaultdict(lambda: [0, 0])
@@ -175,7 +175,7 @@ def test_vif_matches_numpy(spark, sf_small):
 
 
 def test_engle_granger_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_engle_granger
+    from dbt_lab_spark.workload_timeseries import _q_engle_granger
 
     rows = scan(spark, Catalog(sf_small), "events").collect()
     daily: dict = defaultdict(lambda: [0, 0])

@@ -25,7 +25,7 @@ def _r(x: float, dp: int) -> float:
 
 
 def test_quantile_bucketing_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _QB_BUCKETS, _q_quantile_bucketing
+    from dbt_lab_spark.workload_stats import _QB_BUCKETS, _q_quantile_bucketing
 
     li = scan(spark, Catalog(sf_small), "lineitem").collect()
     rows = sorted(
@@ -50,7 +50,7 @@ def test_quantile_bucketing_matches_bruteforce(spark, sf_small):
 
 
 def test_target_encoding_is_leakage_free_and_exact(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _TE_FOLDS, _q_target_encoding
+    from dbt_lab_spark.workload_stats import _TE_FOLDS, _q_target_encoding
 
     orders = scan(spark, Catalog(sf_small), "orders").collect()
     per: dict = defaultdict(lambda: [0, 0])  # (cat, fold) -> [n, sum]
@@ -77,7 +77,7 @@ def test_target_encoding_is_leakage_free_and_exact(spark, sf_small):
 
 
 def test_type_token_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_type_token
+    from dbt_lab_spark.workload_stats import _q_type_token
 
     docs = scan(spark, Catalog(sf_small), "documents").collect()
     cnt: dict = defaultdict(Counter)
@@ -94,7 +94,7 @@ def test_type_token_matches_bruteforce(spark, sf_small):
 
 
 def test_flesch_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_flesch
+    from dbt_lab_spark.workload_stats import _q_flesch
 
     docs = scan(spark, Catalog(sf_small), "documents").collect()
     agg: dict = defaultdict(lambda: [0, 0, 0, 0])  # docs, words, sents, sylls
@@ -120,7 +120,7 @@ def test_flesch_matches_bruteforce(spark, sf_small):
 
 
 def test_croston_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _CROSTON_TOPK, _q_croston
+    from dbt_lab_spark.workload_timeseries import _CROSTON_TOPK, _q_croston
 
     li = scan(spark, Catalog(sf_small), "lineitem").collect()
     daily: dict = defaultdict(int)

@@ -33,7 +33,7 @@ def _daily_purchases(spark, sf) -> dict[int, int]:
 
 
 def test_page_hinkley_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_page_hinkley
+    from dbt_lab_spark.workload_timeseries import _q_page_hinkley
 
     daily = _daily_purchases(spark, sf_small)
     days = sorted(daily)
@@ -57,7 +57,7 @@ def test_page_hinkley_matches_bruteforce(spark, sf_small):
 
 
 def test_sign_test_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_sign_test
+    from dbt_lab_spark.workload_timeseries import _q_sign_test
 
     daily = _daily_purchases(spark, sf_small)
     days = sorted(daily)
@@ -76,7 +76,7 @@ def test_sign_test_matches_bruteforce(spark, sf_small):
 def test_sign_test_lag_is_positional_not_calendar(spark, sf_small):
     """Documents the intended semantics: the lag is 7 OBSERVED days
     back in the ordered daily series (missing calendar days compress)."""
-    from dbt_lab_spark.workload_r4 import _q_sign_test
+    from dbt_lab_spark.workload_timeseries import _q_sign_test
 
     daily = _daily_purchases(spark, sf_small)
     assert len(daily) > 7  # enough observed days for the lag to engage
@@ -87,7 +87,7 @@ def test_sign_test_lag_is_positional_not_calendar(spark, sf_small):
 def test_cohens_d_matches_numpy(spark, sf_small):
     import numpy as np
 
-    from dbt_lab_spark.workload_r4 import _q_cohens_d
+    from dbt_lab_spark.workload_stats import _q_cohens_d
 
     rows = scan(spark, Catalog(sf_small), "events").collect()
     g1 = np.array([_cents(r["value"]) for r in rows if r["event_type"] == "purchase"], dtype=np.float64)
@@ -103,7 +103,7 @@ def test_cohens_d_matches_numpy(spark, sf_small):
 
 
 def test_brier_decomposition_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _BRIER_BINS, _q_brier_score
+    from dbt_lab_spark.workload_stats import _BRIER_BINS, _q_brier_score
 
     cust = scan(spark, Catalog(sf_small), "customer").collect()
     urgent: dict = defaultdict(int)
@@ -140,7 +140,7 @@ def test_silhouette_matches_numpy_and_bounds(spark, sf_small):
     import numpy as np
 
     from dbt_lab_spark.llm.similarity import ivf_centroids
-    from dbt_lab_spark.workload_r4 import _q_silhouette
+    from dbt_lab_spark.workload_stats import _q_silhouette
 
     emb = scan(spark, Catalog(sf_small), "embeddings").collect()
     cents = np.asarray(
@@ -175,7 +175,7 @@ def test_silhouette_matches_numpy_and_bounds(spark, sf_small):
 
 def test_dup_cluster_sizes_union_find(spark, sf_small):
     from dbt_lab_spark.llm.dedup import minhash_dedup_pairs
-    from dbt_lab_spark.workload_r4 import _q_dup_cluster_sizes
+    from dbt_lab_spark.workload_stats import _q_dup_cluster_sizes
 
     docs = scan(spark, Catalog(sf_small), "documents", ["doc_id", "text"])
     n_docs = docs.count()

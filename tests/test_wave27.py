@@ -29,7 +29,7 @@ def _shingles(text: str, k: int = 3) -> set:
 
 
 def test_containment_matches_set_math(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _CONT_THRESHOLD, _q_containment
+    from dbt_lab_spark.workload_stats import _CONT_THRESHOLD, _q_containment
 
     docs = scan(spark, Catalog(sf_small), "documents", ["doc_id", "text"]).collect()
     sh = {r["doc_id"]: _shingles(r["text"]) for r in docs}
@@ -61,7 +61,7 @@ def test_containment_matches_set_math(spark, sf_small):
 
 
 def test_decay_popularity_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _DECAY_TOPK, _q_decay_popularity
+    from dbt_lab_spark.workload_timeseries import _DECAY_TOPK, _q_decay_popularity
 
     li = scan(spark, Catalog(sf_small), "lineitem").collect()
     days = {
@@ -90,7 +90,7 @@ def test_decay_popularity_matches_bruteforce(spark, sf_small):
 
 
 def test_densify_fills_every_gap_exactly(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_densify
+    from dbt_lab_spark.workload_timeseries import _q_densify
 
     rows = scan(spark, Catalog(sf_small), "events").collect()
     daily: dict = defaultdict(lambda: [0, 0])
@@ -111,7 +111,7 @@ def test_densify_fills_every_gap_exactly(spark, sf_small):
 
 
 def test_cumulative_users_first_appearance_trick(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_cumulative_users
+    from dbt_lab_spark.workload_timeseries import _q_cumulative_users
 
     rows = scan(spark, Catalog(sf_small), "events").collect()
     ud = {(r["user_id"], int(r["ts"].timestamp() * 1000) // 86400000) for r in rows}

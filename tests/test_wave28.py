@@ -29,7 +29,7 @@ def _shingles(text: str, k: int = 3) -> set:
 
 
 def test_ngram_novelty_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_ngram_novelty
+    from dbt_lab_spark.workload_stats import _q_ngram_novelty
 
     docs = scan(spark, Catalog(sf_small), "documents").collect()
     first: dict = {}
@@ -54,7 +54,7 @@ def test_ngram_novelty_matches_bruteforce(spark, sf_small):
 
 
 def test_nzv_audit_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _NZV_COLS, _q_nzv_audit
+    from dbt_lab_spark.workload_stats import _NZV_COLS, _q_nzv_audit
 
     li = scan(spark, Catalog(sf_small), "lineitem").collect()
     got = {r["feature"]: r for r in _q_nzv_audit(spark, sf_small).collect()}
@@ -76,7 +76,7 @@ def test_nzv_audit_matches_bruteforce(spark, sf_small):
 
 
 def test_hhi_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_hhi
+    from dbt_lab_spark.workload_stats import _q_hhi
 
     sup = {
         r["s_suppkey"]: r["s_nationkey"]
@@ -107,7 +107,7 @@ def test_hhi_matches_bruteforce(spark, sf_small):
 
 
 def test_iqr_outliers_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_iqr_outliers
+    from dbt_lab_spark.workload_stats import _q_iqr_outliers
 
     groups: dict = defaultdict(list)
     for r in scan(spark, Catalog(sf_small), "events").collect():
@@ -127,7 +127,7 @@ def test_iqr_outliers_matches_bruteforce(spark, sf_small):
 
 
 def test_abandonment_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_abandonment
+    from dbt_lab_spark.workload_timeseries import _q_abandonment
 
     flags: dict = defaultdict(lambda: [0, 0])
     for r in scan(spark, Catalog(sf_small), "events").collect():

@@ -30,7 +30,7 @@ def _predict(text: str) -> str:
 
 
 def test_lang_confusion_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_lang_confusion
+    from dbt_lab_spark.workload_stats import _q_lang_confusion
 
     docs = scan(spark, Catalog(sf_small), "documents").collect()
     exp: Counter = Counter((r["lang"], _predict(r["text"])) for r in docs)
@@ -45,7 +45,7 @@ def test_lang_confusion_matches_bruteforce(spark, sf_small):
 
 
 def test_length_profile_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_length_profile
+    from dbt_lab_spark.workload_stats import _q_length_profile
 
     docs = scan(spark, Catalog(sf_small), "documents").collect()
     per: dict = defaultdict(list)
@@ -65,7 +65,7 @@ def test_length_profile_matches_bruteforce(spark, sf_small):
 
 
 def test_heaps_law_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _HEAPS_PREFIXES, _q_heaps_law
+    from dbt_lab_spark.workload_stats import _HEAPS_PREFIXES, _q_heaps_law
 
     docs = sorted(
         scan(spark, Catalog(sf_small), "documents").collect(), key=lambda r: r["doc_id"]
@@ -111,7 +111,7 @@ def test_heaps_law_matches_bruteforce(spark, sf_small):
 
 def test_cross_source_dups_matches_bruteforce(spark, sf_small):
     from dbt_lab_spark.llm.dedup import minhash_dedup_pairs
-    from dbt_lab_spark.workload_r4 import _q_cross_source_dups
+    from dbt_lab_spark.workload_stats import _q_cross_source_dups
 
     docs = scan(spark, Catalog(sf_small), "documents", ["doc_id", "text"])
     src = {

@@ -35,7 +35,7 @@ def _daily_purchases(spark, sf) -> dict[int, int]:
 
 
 def test_bowley_skew_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_bowley_skew
+    from dbt_lab_spark.workload_stats import _q_bowley_skew
 
     groups: dict = defaultdict(list)
     for r in scan(spark, Catalog(sf_small), "events").collect():
@@ -55,7 +55,7 @@ def test_bowley_skew_matches_bruteforce(spark, sf_small):
 
 
 def test_moving_range_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _IMR_D4, _IMR_E2, _q_moving_range
+    from dbt_lab_spark.workload_timeseries import _IMR_D4, _IMR_E2, _q_moving_range
 
     daily = _daily_purchases(spark, sf_small)
     days = sorted(daily)
@@ -74,7 +74,7 @@ def test_moving_range_matches_bruteforce(spark, sf_small):
 
 
 def test_two_prop_z_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_two_prop_z
+    from dbt_lab_spark.workload_stats import _q_two_prop_z
 
     n1 = k1 = n2 = k2 = 0
     for r in scan(spark, Catalog(sf_small), "events").collect():
@@ -96,7 +96,7 @@ def test_two_prop_z_matches_bruteforce(spark, sf_small):
 
 
 def test_odds_ratio_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_odds_ratio
+    from dbt_lab_spark.workload_stats import _q_odds_ratio
 
     flags: dict = defaultdict(lambda: [0, 0])
     for r in scan(spark, Catalog(sf_small), "events").collect():
@@ -121,7 +121,7 @@ def test_odds_ratio_matches_bruteforce(spark, sf_small):
 
 
 def test_cramers_v_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _q_cramers_v
+    from dbt_lab_spark.workload_stats import _q_cramers_v
 
     cells: Counter = Counter()
     for r in scan(spark, Catalog(sf_small), "events").collect():
@@ -147,7 +147,7 @@ def test_cramers_v_matches_bruteforce(spark, sf_small):
 
 
 def test_youden_j_matches_bruteforce(spark, sf_small):
-    from dbt_lab_spark.workload_r4 import _YJ_BINS, _q_youden_j
+    from dbt_lab_spark.workload_stats import _YJ_BINS, _q_youden_j
 
     urgent: dict = defaultdict(int)
     for r in scan(spark, Catalog(sf_small), "orders").collect():

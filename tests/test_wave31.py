@@ -112,7 +112,7 @@ def test_bowley_skew_degenerate_iqr_is_null(spark):
     to the oracle's CASE WHEN guard."""
     import duckdb
 
-    from dbt_lab_spark.workload_r4 import _SQL_BOWLEY_SKEW
+    from dbt_lab_spark.workload_stats import _SQL_BOWLEY_SKEW
 
     rows = [(i, "flat", 5.0) for i in range(20)] + [
         (100 + i, "vary", float(i)) for i in range(20)
@@ -177,7 +177,7 @@ def test_moving_range_single_day_counts_zero(spark):
     both engines (when/otherwise(0), not a NULL-summing cast)."""
     import duckdb
 
-    from dbt_lab_spark.workload_r4 import _SQL_MOVING_RANGE
+    from dbt_lab_spark.workload_timeseries import _SQL_MOVING_RANGE
 
     con = duckdb.connect()
     con.execute(
@@ -202,7 +202,7 @@ def test_moving_range_single_day_spark_matches(spark, sf_small, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from dbt_lab_spark.workload_r4 import _q_moving_range
+    from dbt_lab_spark.workload_timeseries import _q_moving_range
 
     schema = pq.read_schema(os.path.join(sf_small, "events.parquet"))
     src = pq.read_table(os.path.join(sf_small, "events.parquet"))

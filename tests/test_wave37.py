@@ -1,56 +1,8 @@
-"""Round-8 wave: stall-triage taxonomy fix (VERDICT r7 #5) and the
-round's storage/streaming additions as they land.
-
-The classifier contract (VERDICT r7 "what's wrong" #1): an isolated
-re-measure that comes back HIGHER than the in-ledger ratio is the
-inversion signature of end-of-session machine saturation and must NOT
-be labeled a regression; `regression` requires isolated > threshold
-AND isolated <= ledger.
+"""Round-8 wave: the round's storage additions — Bloom-filter type
+canonicalization, optimistic concurrency, the DV size policy,
+timestamp time travel and constraint-literal evolution for
+SnapshotTable.
 """
-
-import sys
-import os
-
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "scripts"))
-
-from stall_triage import classify  # noqa: E402
-
-
-class TestStallTriageClassify:
-    def test_noise_under_ceiling(self):
-        assert classify(2.1, 0.9) == "noise"
-        assert classify(1.4, 1.3) == "noise"
-
-    def test_inverted_environment_not_regression(self):
-        # the two r7 false-"regression" shapes: isolated ABOVE ledger
-        assert classify(1.32, 1.84) == "inverted-environment"
-        assert classify(1.30, 2.07) == "inverted-environment"
-
-    def test_inversion_beats_borderline(self):
-        # 1.3 < isolated <= threshold but still above the ledger read
-        assert classify(1.31, 1.45) == "inverted-environment"
-
-    def test_regression_requires_leq_ledger(self):
-        assert classify(2.5, 1.8) == "regression"
-        # equal to the ledger reading reproduces it, not inverts it
-        assert classify(1.8, 1.8) == "regression"
-        assert classify(1.7, 1.9) == "inverted-environment"
-
-    def test_borderline(self):
-        assert classify(1.6, 1.4) == "borderline"
-
-    def test_threshold_respected(self):
-        assert classify(2.0, 1.7, threshold=1.8) == "borderline"
-        assert classify(2.0, 1.9, threshold=1.8) == "regression"
-
-    def test_error_on_missing_measure(self):
-        assert classify(1.5, None) == "error"
-
-    def test_forced_query_without_ledger_ratio(self):
-        # --queries names may have no anchor in the ledger; no ledger
-        # ratio means the inversion test cannot fire
-        assert classify(None, 1.1) == "noise"
-        assert classify(None, 1.9) == "regression"
 
 
 # ---------------------------------------------------------------------------

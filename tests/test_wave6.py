@@ -16,16 +16,18 @@ import duckdb
 import numpy as np
 import pytest
 
-from dbt_lab_spark.workload_r3s5 import (
+from dbt_lab_spark.workload_extras import _trade_edges_topk
+from dbt_lab_spark.workload_stats import (
     _q_bh_fdr,
-    _q_changepoint,
-    _q_drawdown,
     _q_link_pred,
     _q_mann_whitney,
-    _q_max_concurrent,
     _q_mutual_info,
+)
+from dbt_lab_spark.workload_timeseries import (
+    _q_changepoint,
+    _q_drawdown,
+    _q_max_concurrent,
     _q_streaks,
-    _trade_edges_topk,
 )
 
 

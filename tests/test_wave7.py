@@ -14,13 +14,13 @@ from collections import defaultdict
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s5 import (
+from dbt_lab_spark.workload_stats import (
     _q_cuped,
-    _q_dtw,
     _q_hits,
     _q_isotonic,
     _q_woe_iv,
 )
+from dbt_lab_spark.workload_timeseries import _q_dtw
 from dbt_lab_spark.workload_extras import _trade_edges_topk
 
 

@@ -14,13 +14,12 @@ from decimal import Decimal
 import duckdb
 import numpy as np
 
-from dbt_lab_spark.workload_r3s6 import (
+from dbt_lab_spark.workload_stats import (
     _q_conformal,
     _q_did,
-    _q_hampel,
-    _q_sprt,
     _q_weighted_median,
 )
+from dbt_lab_spark.workload_timeseries import _q_hampel, _q_sprt
 
 
 def _duck(sf_dir: str, sql: str):

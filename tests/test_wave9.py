@@ -13,13 +13,13 @@ import duckdb
 import numpy as np
 
 from dbt_lab_spark.workload_extras import _trade_edges_topk
-from dbt_lab_spark.workload_r3s6 import (
+from dbt_lab_spark.workload_stats import (
     _q_elasticity,
     _q_kcore,
     _q_qq_plot,
-    _q_runs_test,
     _q_split_gain,
 )
+from dbt_lab_spark.workload_timeseries import _q_runs_test
 
 
 def _duck(sf_dir: str, sql: str):

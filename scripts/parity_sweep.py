@@ -12,9 +12,17 @@ both before calling a round done:
 
     python scripts/parity_sweep.py /root/testdata/sf0.001 /tmp/p0001.txt
     python scripts/parity_sweep.py /root/testdata/sf0.1   /tmp/p01.txt
+    python scripts/parity_sweep.py --tuned <sf_dir> <report_file>
 
-Last full result (r1): 116/116 OK at sf0.001, sf0.01, and sf0.1.
+By default the session is a vanilla one, as the driver's gate builds
+it: scans read parquet directly.  `--tuned` builds the engine's own
+session (`dbt_lab_spark.session.get_spark()`), so scans go through the
+CBO catalog tables and every conf it sets is checked against the
+oracles too; both modes must report the same count.
+
+Last full result: 384/384 OK at sf0.001 in both modes.
 """
+import argparse
 import os
 import sys
 import time
@@ -32,17 +40,28 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 from pyspark.sql import SparkSession
 
 import __spark_entry__ as e
+from conftest import SF_SMALL  # noqa: E402  (tests/conftest.py)
 from oracle import duckdb_connect, compare  # noqa: E402  (tests/oracle.py)
 
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-out = open(sys.argv[2], "w") if len(sys.argv) > 2 else sys.stderr
+ap = argparse.ArgumentParser(description="oracle-parity sweep over every oracle-backed query")
+ap.add_argument("sf", nargs="?", default=SF_SMALL)
+ap.add_argument("out", nargs="?", default=None, help="report file (default: stderr)")
+ap.add_argument("--tuned", action="store_true", help="use the engine's get_spark() session")
+args = ap.parse_args()
+SF = args.sf
+out = open(args.out, "w") if args.out else sys.stderr
 
-spark = (
-    SparkSession.builder.master("local[16]")
-    .config("spark.sql.shuffle.partitions", "16")
-    .config("spark.ui.showConsoleProgress", "false")
-    .getOrCreate()
-)
+if args.tuned:
+    from dbt_lab_spark.session import get_spark
+
+    spark = get_spark(app_name="parity-sweep-tuned", extra_conf={"spark.ui.showConsoleProgress": "false"})
+else:
+    spark = (
+        SparkSession.builder.master("local[16]")
+        .config("spark.sql.shuffle.partitions", "16")
+        .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
+    )
 spark.sparkContext.setLogLevel("ERROR")
 con = duckdb_connect(SF)
 qs, osql = e.queries(), e.oracle_sql()

@@ -788,3 +788,26 @@ def test_dv_apply_is_broadcast_anti_join(spark, tmp_path):
     plan = t.read(spark)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_tpch_pass_reuses_generated_code(spark, sf_small):
+    """The session's codegen cache holds the TPC-H working set: the 22
+    queries generate about 270 distinct classes, so with Spark's default
+    of 100 cache entries every pass recompiles all of them with Janino.
+    A second pass at the same plans must compile nothing — keep
+    `spark.sql.codegen.cache.maxEntries` in `session.get_spark()` well
+    above 270 (the whole OLAP pass cycles through about 460)."""
+    import __spark_entry__
+
+    builders = [b for n, b in sorted(__spark_entry__.queries().items()) if n.startswith("q_tpch_q")]
+    assert len(builders) == 22
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()  # noqa: SLF001
+
+    def one_pass() -> None:
+        for build in builders:
+            build(spark, sf_small).write.format("noop").mode("overwrite").save()
+
+    one_pass()
+    before = compiles.getCount()
+    one_pass()
+    assert compiles.getCount() - before == 0

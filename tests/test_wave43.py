@@ -17,9 +17,9 @@ C = 4  # ann_lists used throughout
 
 def _vecs(spark, lo, hi, drift=False):
     """Deterministic 4-d vectors, no zero norms.  `drift=True` switches
-    to a second DIRECTIONAL mode (the ann_scale_probe construction:
-    two pinned dims + two large varying dims) — cosine-space drift,
-    which a mere magnitude shift would not create."""
+    to a second DIRECTIONAL mode (two pinned dims + two large varying
+    dims) — cosine-space drift, which a mere magnitude shift would not
+    create."""
     if drift:
         cols = [
             F.lit(1.0)
